@@ -15,20 +15,26 @@ Spark-first restatement, with the engine doing the hard half:
   hand-rolled clamping.
 * **Exactly-once sink**: ``foreachBatch`` + batchId-keyed idempotent
   writes.  A replayed batch overwrites its own partition directory
-  instead of appending duplicates.
+  instead of appending duplicates.  The sink write is the batch's ONLY
+  Spark job: the ledger's count/min/max ride on it as a
+  ``pyspark.sql.Observation``.
 * **Audit**: a parquet ledger row per (group, source, batch) mirroring
   the reference's ZK node content — queryable lineage of what was
-  committed when, which ZooKeeper never gave you.
+  committed when, which ZooKeeper never gave you.  The driver writes
+  the row with pyarrow AFTER the sink write returns (store offsets
+  after output) and publishes it with one atomic ``os.replace``, so a
+  replay swaps the row and never deletes it first.
 
 The kill/restart exactly-once property is asserted by
-tests/test_streaming.py::test_offset_ledger_exactly_once.
+tests/test_streaming.py::test_offset_ledger_exactly_once_across_restart.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -44,14 +50,32 @@ LEDGER_SCHEMA = (
 )
 
 
+def ledger_arrow_schema():
+    """``LEDGER_SCHEMA`` as an Arrow schema, so the driver-side ledger
+    writer and the Spark readers share one column definition."""
+    import pyarrow as pa
+
+    types = {"string": pa.string(), "long": pa.int64()}
+    return pa.schema(
+        [(name, types[t]) for name, t in map(str.split, LEDGER_SCHEMA.split(","))]
+    )
+
+
 class OffsetLedger:
     """batchId-keyed idempotent sink + offset-audit ledger.
 
-    ``process(df, batch_id)`` writes the batch's rows to
-    ``sink_dir/batch_id=N`` and one audit row to ``ledger_dir/batch_id=N``
-    with mode=overwrite — re-running a batch (crash between sink write
-    and WAL commit) replaces rather than duplicates, which is the
-    idempotence that turns at-least-once replay into exactly-once output.
+    ``process(df, batch_id)`` is one Spark job: it writes the batch's rows
+    to ``sink_dir/batch_id=N`` (mode=overwrite) while an ``Observation``
+    on the same job collects the row count and event_id range.  Only
+    after that write returns does the driver write the audit row with
+    pyarrow to a hidden temp file in ``ledger_dir/batch_id=N/``, publish
+    it with ``os.replace`` onto ``part-00000.parquet`` and touch
+    ``_SUCCESS`` last.  Re-running a batch (crash between sink write and
+    WAL commit) replaces rather than duplicates both — the idempotence
+    that turns at-least-once replay into exactly-once output.
+
+    ``root`` must be a local POSIX path, as for ``sources/txnlog.py``:
+    the ledger publish is an ``os.replace``, atomic only there.
     """
 
     def __init__(self, root: str, group: str = "sskos", source: str = "events-file"):
@@ -61,35 +85,25 @@ class OffsetLedger:
         self.source = source
 
     def process(self, df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        df.persist()
-        try:
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.sink_dir, f"batch_id={batch_id}")
-            )
-            stats = df.agg(
-                F.count("*").alias("n_rows"),
-                F.min("event_id").alias("min_event_id"),
-                F.max("event_id").alias("until_event_id"),
-            ).collect()[0]
-            audit = spark.createDataFrame(
-                [
-                    (
-                        self.group,
-                        self.source,
-                        batch_id,
-                        stats["n_rows"],
-                        stats["min_event_id"],
-                        stats["until_event_id"],
-                    )
-                ],
-                LEDGER_SCHEMA,
-            )
-            audit.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.ledger_dir, f"batch_id={batch_id}")
-            )
-        finally:
-            df.unpersist()
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        obs = Observation()
+        df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("event_id").alias("min_event_id"),
+            F.max("event_id").alias("until_event_id"),
+        ).write.mode("overwrite").parquet(
+            os.path.join(self.sink_dir, f"batch_id={batch_id}")
+        )
+        row = dict(obs.get, group=self.group, source=self.source, batch_id=batch_id)
+        part = os.path.join(self.ledger_dir, f"batch_id={batch_id}")
+        os.makedirs(part, exist_ok=True)
+        tmp = os.path.join(part, ".part-00000.parquet.tmp")
+        pq.write_table(pa.Table.from_pylist([row], ledger_arrow_schema()), tmp)
+        os.replace(tmp, os.path.join(part, "part-00000.parquet"))
+        open(os.path.join(part, "_SUCCESS"), "w").close()
 
     def read_ledger(self, spark: SparkSession) -> DataFrame:
         return spark.read.schema(LEDGER_SCHEMA).parquet(
@@ -157,10 +171,7 @@ def stream_offset_lag_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a MAX over the partition column of the live table (at 100 TB a
     metadata-only op for append-ordered ids); nothing here touches the
     fact table's width."""
-    import os
     import shutil
-
-    from ..session import load_table
 
     stream_dir = _range_chunked_stream_dir(spark, sf_dir, n_chunks=4)
     # 2-chunk prefix = a consumer that has not caught up to the head.
@@ -203,11 +214,7 @@ def _range_chunked_stream_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 
     event_id range), unlike ``stage_stream_dir``'s mod-split: with range
     chunks each batch's ``until_event_id`` is a true high-watermark, so
     ledger offsets are meaningful resume points."""
-    import os
     import time
-
-    from ..common import scratch_path
-    from ..session import load_table
 
     out = scratch_path("sskos_rangechunks_")
     e = load_table(spark, sf_dir, "events")
@@ -310,9 +317,6 @@ def stream_offset_rewind(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the gate is a pushed-down scan filter here, exactly as Kafka's
     seek-to-offset skips log segments); ledger reads are batch-count
     sized."""
-    from ..common import scratch_path
-    from ..session import load_table
-
     stream_dir = _range_chunked_stream_dir(spark, sf_dir, n_chunks=3)
     full = run_ledgered_stream(
         spark,
@@ -363,8 +367,6 @@ def audit_ledger_contiguity(ledger: DataFrame, scenario: str) -> DataFrame:
     """Offset-range contiguity audit over an audit ledger — shared by
     `stream_offset_gap_audit`'s clean and damaged scenarios (the shared
     function is the contract, cf. streaming/core.dlq_reason)."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("group", "source").orderBy("batch_id")
     prev = F.lag("until_event_id").over(w)
     withprev = ledger.select(
@@ -619,8 +621,6 @@ def run_txn_exactly_once(
     where a separate offset store would double-count on replay.  The
     orphaned files stay in data/ (invisible; compaction's janitor
     problem) and the replay re-writes and commits exactly once."""
-    import json as _json
-
     from ..sources.txnlog import _write_data_files, txn_commit
 
     def committed_batches() -> set[int]:
@@ -631,7 +631,7 @@ def run_txn_exactly_once(
         for f in os.listdir(log_dir):
             if f.endswith(".json"):
                 with open(os.path.join(log_dir, f)) as fh:
-                    rec = _json.load(fh)
+                    rec = json.load(fh)
                 if "batch_id" in rec:
                     out.add(int(rec["batch_id"]))
         return out
@@ -678,8 +678,6 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets-in-the-sink half of the reference's contract [K]; the
     ledger family (`stream_offset_ledger`) is the offsets-beside-the-
     sink half — both ends of the Kafka offset-storage design space."""
-    import json as _json
-
     table_dir = scratch_path("sskos_txn_eo_")
     run_txn_exactly_once(
         spark, sf_dir, table_dir, checkpoint=scratch_path("ckpt_")
@@ -689,7 +687,7 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     for f in sorted(os.listdir(log_dir)):
         if f.endswith(".json"):
             with open(os.path.join(log_dir, f)) as fh:
-                recs.append(_json.load(fh))
+                recs.append(json.load(fh))
     rows = [
         (
             int(r["version"]),

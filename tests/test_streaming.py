@@ -18,7 +18,9 @@ from spark_streaming_kafka_offset_spark.streaming.core import (
     stage_stream_dir,
 )
 from spark_streaming_kafka_offset_spark.streaming.offsets import (
+    LEDGER_SCHEMA,
     OffsetLedger,
+    ledger_arrow_schema,
     run_ledgered_stream,
 )
 from spark_streaming_kafka_offset_spark.streaming.stateful import running_user_stats
@@ -304,6 +306,42 @@ def test_offset_ledger_exactly_once_across_restart(spark, tmp_path):
     sink_ids = [r["event_id"] for r in ledger.read_sink(spark).collect()]
     src_ids = [r["event_id"] for r in _batch_events(spark).collect()]
     assert sorted(sink_ids) == sorted(src_ids), "sink lost/duplicated rows"
+
+
+def test_offset_ledger_on_disk_contract(spark, tmp_path):
+    """The ledger layout that readers without Spark rely on: each
+    ``ledger/batch_id=N/`` holds ``_SUCCESS`` and exactly one parquet
+    file whose ``until_event_id`` pyarrow alone reads as the batch max,
+    in ``LEDGER_SCHEMA``'s columns.  Replaying the batch id replaces the
+    ledger row and the sink rows instead of adding to them, and leaves no
+    temp file behind."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    ledger = OffsetLedger(str(tmp_path / "contract"))
+    batch = _batch_events(spark).where(F.col("event_id") % 7 == 3)
+    ids = sorted(r["event_id"] for r in batch.collect())
+    part = os.path.join(ledger.ledger_dir, "batch_id=5")
+
+    for _ in range(2):  # first run, then a replay of the same batch id
+        ledger.process(batch, 5)
+        files = os.listdir(part)
+        parquet = [f for f in files if f.endswith(".parquet")]
+        assert "_SUCCESS" in files and len(parquet) == 1
+        table = pq.read_table(os.path.join(part, parquet[0]))
+        assert table.schema == ledger_arrow_schema()
+        assert table["until_event_id"].to_pylist() == [ids[-1]]
+        assert table["min_event_id"].to_pylist() == [ids[0]]
+        assert table["n_rows"].to_pylist() == [len(ids)]
+        sink_ids = sorted(r["event_id"] for r in ledger.read_sink(spark).collect())
+        assert sink_ids == ids, "replay duplicated or lost sink rows"
+        assert ledger.read_ledger(spark).count() == 1
+
+    expected = spark.createDataFrame([], LEDGER_SCHEMA).schema
+    assert ledger.read_ledger(spark).schema == expected
+    for d, _, files in os.walk(str(tmp_path / "contract")):
+        assert not [f for f in files if f.endswith(".tmp")], f"temp file left in {d}"
 
 
 def _committed_batches(spark, ledger: OffsetLedger) -> list[int]:
