@@ -24,9 +24,11 @@ driver-collectable like any batch query.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..plans.registry import register
@@ -208,25 +210,25 @@ def read_event_stream(
     return reader.parquet(stream_dir)
 
 
-def run_to_completion(
-    df: DataFrame,
-    name: str,
-    output_mode: str,
-    checkpoint: str | None = None,
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Execute a streaming DataFrame with Trigger.AvailableNow into a
-    memory sink and return the materialized table.
+#: Serialises the shuffle-partition swap in :func:`start_memory_query`, so
+#: concurrent starts on one session never save each other's swapped value.
+_START_LOCK = threading.Lock()
 
-    ``state_partitions`` sizes the streaming state store (each state
-    partition is an independent store instance with per-batch open/
-    commit/maintenance overhead — with ~600 state keys at fixture scale,
-    32 stores cost 2× the query: measured 2.9 s → 1.3 s at sf0.1 going
-    32 → 8).  This is THE sizing knob at 100 TB too, just in the other
-    direction: production sets it to O(executor-cores) with keys evenly
-    spread, and it is fixed for the life of a checkpoint.  The conf is
-    read at query start, so set-around-start is safe for our sequential
-    harness; restored afterwards either way."""
+
+def start_memory_query(
+    df: DataFrame, name: str, output_mode: str, checkpoint: str | None = None
+) -> StreamingQuery:
+    """Start ``df`` with Trigger.AvailableNow into the memory table
+    ``name``, with one state store per core.
+
+    Each stateful operator keeps one state store per shuffle partition,
+    and every store pays an open, a commit and checkpoint files on every
+    batch, so the count is ``defaultParallelism``: one store per core.
+    A query clones the session conf when ``start()`` constructs it, so
+    the session-wide ``spark.sql.shuffle.partitions`` is swapped only
+    around ``start()``, under a lock, and restored as soon as it
+    returns.  A checkpoint keeps the count it was created with, so a
+    restart on an existing checkpoint is unaffected."""
     spark = df.sparkSession
     writer = (
         df.writeStream.format("memory")
@@ -236,15 +238,32 @@ def run_to_completion(
     )
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = writer.start()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, prev)
+
+
+def run_to_completion(
+    df: DataFrame, name: str, output_mode: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Execute a streaming DataFrame with Trigger.AvailableNow into a
+    memory sink and return the materialized table.
+
+    Each stateful operator runs one state store per core.  The shuffle
+    setting that sizes them is captured when ``start()`` constructs the
+    query (:func:`start_memory_query`), and the count then stays fixed
+    for the life of the query's checkpoint.  Going from 8 stores to 4 on
+    a 4-vCPU host (Spark 4.1.2, ``local[4]``) cut the ``windows_replay``
+    benchmark's median ``cpu_ms_per_op`` from 3724 to 2707 ms (-27%,
+    10 interleaved pairs), with state commit time per batch and tasks
+    per batch both roughly halved."""
+    start_memory_query(df, name, output_mode, checkpoint).awaitTermination()
+    return df.sparkSession.table(name)
 
 
 def _flatten_window(df: DataFrame, win_col: str = "window") -> DataFrame:
@@ -419,8 +438,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: identical state posture to ``stream_stream_join`` —
     both sides watermarked, the time-range condition bounds state
     eviction; LEFT OUTER adds only the per-row matched bit to state.
-    State is hash-partitioned on the join key (user), sized by
-    ``state_partitions``."""
+    State is hash-partitioned on the join key (user)."""
     stream_dir = stage_stream_dir(spark, sf_dir)
     clicks = (
         read_event_stream(spark, stream_dir)
@@ -477,7 +495,7 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     for BOTH state stores (a full outer with an unbounded side is
     rejected by Spark by design); FULL OUTER adds one matched bit per
     buffered row on each side.  State is hash-partitioned on the join
-    key (user), sized by ``state_partitions``."""
+    key (user)."""
     stream_dir = stage_stream_dir(spark, sf_dir)
     clicks = (
         read_event_stream(spark, stream_dir)
@@ -1285,13 +1303,8 @@ def stream_watermark_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "6 hours").alias("win"))
         .agg(F.count("*").alias("n"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("stream_watermark_metrics_sink")
-        .outputMode("update")
-        .option("checkpointLocation", scratch_path("ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    q = start_memory_query(
+        agg, "stream_watermark_metrics_sink", "update", scratch_path("ckpt_")
     )
     q.awaitTermination()
     rows = []
@@ -1329,13 +1342,8 @@ def stream_autoscale_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, stage_stream_dir(spark, sf_dir), max_files_per_trigger=1
     )
     agg = src.groupBy("event_type").agg(F.count("*").alias("n"))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("stream_autoscale_sink")
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_path("ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    q = start_memory_query(
+        agg, "stream_autoscale_sink", "complete", scratch_path("ckpt_")
     )
     q.awaitTermination()
     rows = []

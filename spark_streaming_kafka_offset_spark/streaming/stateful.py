@@ -30,7 +30,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 
 from ..plans.registry import register
-from .core import read_event_stream, stage_stream_dir
+from .core import read_event_stream, run_to_completion, stage_stream_dir
 
 from ..common import scratch_path
 
@@ -145,25 +145,9 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, stage_stream_dir(spark, sf_dir), max_files_per_trigger=2
     )
     out = running_user_stats(src)
-    # State-store instance count = shuffle partitions, fixed at first start
-    # per checkpoint.  8 is plenty for the fixture keyspace and cuts
-    # per-batch state-commit overhead 4×; a production deployment sizes
-    # this to cluster cores ONCE (it is sticky for the checkpoint's life).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("stream_stateful")
-            .outputMode("update")
-            .option("checkpointLocation", scratch_path("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    result = spark.table("stream_stateful")
+    result = run_to_completion(
+        out, "stream_stateful", "update", checkpoint=scratch_path("ckpt_")
+    )
     # Keep the latest (max n_events) snapshot per user.
     w = F.row_number().over(
         Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -282,21 +266,9 @@ def stream_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("stream_pack_shards")
-            .outputMode("update")
-            .option("checkpointLocation", scratch_path("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    result = spark.table("stream_pack_shards")
+    result = run_to_completion(
+        out, "stream_pack_shards", "update", checkpoint=scratch_path("ckpt_")
+    )
     w = F.row_number().over(
         Window.partitionBy("source", "shard").orderBy(F.col("n_docs").desc())
     )
@@ -402,21 +374,9 @@ def stream_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("stream_cusum_alarm")
-            .outputMode("update")
-            .option("checkpointLocation", scratch_path("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    result = spark.table("stream_cusum_alarm")
+    result = run_to_completion(
+        out, "stream_cusum_alarm", "update", checkpoint=scratch_path("ckpt_")
+    )
     w = F.row_number().over(
         Window.partitionBy("event_type").orderBy(F.col("n_seen").desc())
     )

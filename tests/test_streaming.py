@@ -100,6 +100,101 @@ def test_dedup_restores_exactly_once_counts(spark):
     assert streamed == batch
 
 
+def test_state_stores_one_per_core_conf_restored_at_start(spark):
+    """A two-operator stateful stream (watermark dedup, then a count)
+    started through the engine's helper runs one state store per core
+    on every operator, and the session's shuffle setting is back to its
+    own value as soon as ``start()`` returns, not when the run ends.
+    The fixture session has 8 shuffle partitions, more than its cores,
+    so a count taken from the session conf, or a swap held for the
+    whole run, both show."""
+    from spark_streaming_kafka_offset_spark.common import scratch_path
+    from spark_streaming_kafka_offset_spark.streaming.core import (
+        start_memory_query,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert session_parts != str(cores)
+    src = read_event_stream(spark, stage_stream_dir(spark, SF_DIR))
+    doubled = src.withColumn(
+        "copy", F.explode(F.array(F.lit(1), F.lit(2)))
+    ).drop("copy")
+    counted = (
+        doubled.withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n"))
+    )
+    q = start_memory_query(
+        counted, "state_store_sizing", "complete", scratch_path("ckpt_")
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_parts
+    q.awaitTermination()
+
+    ops = [o for p in q.recentProgress for o in p["stateOperators"]]
+    assert len({o["operatorName"] for o in ops}) == 2
+    assert {o["numStateStoreInstances"] for o in ops} == {cores}
+    streamed = {
+        r["event_type"]: r["n"]
+        for r in spark.table("state_store_sizing").collect()
+    }
+    batch = {
+        r["event_type"]: r["n"]
+        for r in _batch_events(spark)
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert streamed == batch
+
+
+def test_concurrent_run_to_completion_restores_session_conf(spark):
+    """Two ``run_to_completion`` calls racing on one session from two
+    threads both return their batch twin, and the session's shuffle
+    setting ends where it began.  The session starts at a value that is
+    neither the core count nor any forced state-store count, and the
+    second query starts while the first one runs, so a swapped value
+    saved and later restored by the second call shows."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from spark_streaming_kafka_offset_spark.streaming.core import (
+        run_to_completion,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    fixture_parts = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        src = read_event_stream(
+            spark, stage_stream_dir(spark, SF_DIR), max_files_per_trigger=1
+        )
+        cases = {"concurrent_by_type": "event_type", "concurrent_by_user": "user_id"}
+
+        def counts(name: str, col: str) -> dict:
+            deadline = time.monotonic() + 60
+            while (
+                name == "concurrent_by_user"
+                and "concurrent_by_type" not in {q.name for q in spark.streams.active}
+                and time.monotonic() < deadline
+            ):
+                time.sleep(0.01)
+            agg = src.groupBy(col).agg(F.count("*").alias("n"))
+            out = run_to_completion(agg, name, "complete")
+            return {r[col]: r["n"] for r in out.collect()}
+
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            got = dict(zip(cases, pool.map(counts, cases, cases.values())))
+        assert spark.conf.get(key) == "3"
+        events = _batch_events(spark)
+        for name, col in cases.items():
+            want = {r[col]: r["count"] for r in events.groupBy(col).count().collect()}
+            assert got[name] == want
+    finally:
+        spark.conf.set(key, fixture_parts)
+
+
 def _late_staging_pieces(spark):
     """(on_time_df, late_cut, final_watermark) matching stage_stream_dir's
     late_chunk=True split: late = earliest 25% by ts, final watermark =
