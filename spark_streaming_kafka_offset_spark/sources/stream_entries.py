@@ -24,6 +24,7 @@ from ..streaming.core import (
     _EVENT_COLS,
     parse_kafka_events,
     read_event_stream,
+    run_stream,
     run_to_completion,
     stage_stream_dir,
 )
@@ -88,13 +89,7 @@ def sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         seen.append((batch_id, row["n"], float(row["v"])))
 
-    q = (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", scratch_path("ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, handle, checkpoint=scratch_path("ckpt_"))
     return spark.createDataFrame(
         sorted(seen), "batch_id long, n_rows long, total_value double"
     )

@@ -16,15 +16,18 @@ no stream runtime); each also has a batch-equivalence pytest
 (tests/test_streaming.py) asserting the streamed answer equals the batch
 answer over the same rows — that is the real correctness check.
 
-All queries run ``Trigger.AvailableNow`` over a deterministic chunked
-copy of ``events`` and return the materialized result, so they are
-driver-collectable like any batch query.
+Every engine stream starts through :func:`run_stream`, the one start
+path: it owns the ``Trigger.AvailableNow`` trigger, the checkpoint, the
+state-store sizing and the wait for completion.  Queries run over a
+deterministic chunked copy of ``events`` and return the materialized
+result, so they are driver-collectable like any batch query.
 """
 
 from __future__ import annotations
 
 import os
 import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -210,32 +213,47 @@ def read_event_stream(
     return reader.parquet(stream_dir)
 
 
-#: Serialises the shuffle-partition swap in :func:`start_memory_query`, so
+#: Serialises the shuffle-partition swap in :func:`run_stream`, so
 #: concurrent starts on one session never save each other's swapped value.
 _START_LOCK = threading.Lock()
 
 
-def start_memory_query(
-    df: DataFrame, name: str, output_mode: str, checkpoint: str | None = None
+def run_stream(
+    df: DataFrame,
+    sink: Callable[[DataFrame, int], None] | None = None,
+    *,
+    name: str | None = None,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
 ) -> StreamingQuery:
-    """Start ``df`` with Trigger.AvailableNow into the memory table
-    ``name``, with one state store per core.
+    """The engine's one stream start path: run ``df`` to completion with
+    Trigger.AvailableNow and return the finished query, whose
+    ``recentProgress`` stays readable.  ``sink`` is a ``foreachBatch``
+    function ``(batch_df, batch_id)``, or ``None`` for the memory table
+    ``name``.
 
     Each stateful operator keeps one state store per shuffle partition,
     and every store pays an open, a commit and checkpoint files on every
     batch, so the count is ``defaultParallelism``: one store per core.
+    On a 4-vCPU host (Spark 4.1.2, ``local[4]``), 4 stores instead of 8
+    cut the ``windows_replay`` benchmark's median ``cpu_ms_per_op`` 27%.
     A query clones the session conf when ``start()`` constructs it, so
     the session-wide ``spark.sql.shuffle.partitions`` is swapped only
     around ``start()``, under a lock, and restored as soon as it
     returns.  A checkpoint keeps the count it was created with, so a
-    restart on an existing checkpoint is unaffected."""
+    restart on an existing checkpoint is unaffected.  A ``foreachBatch``
+    function's batch DataFrame runs in that clone, with one shuffle
+    partition per core too.
+
+    Spark 4.1 rule: over a stateful stream, a ``foreachBatch`` function
+    must consume every partition of its batch, or the batch fails with
+    ``STATE_STORE_COMMIT_VALIDATION_FAILED``."""
     spark = df.sparkSession
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
+    writer = df.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    if sink is None:
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(sink)
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
     key = "spark.sql.shuffle.partitions"
@@ -243,26 +261,19 @@ def start_memory_query(
         prev = spark.conf.get(key)
         spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
         try:
-            return writer.start()
+            q = writer.start()
         finally:
             spark.conf.set(key, prev)
+    q.awaitTermination()
+    return q
 
 
 def run_to_completion(
     df: DataFrame, name: str, output_mode: str, checkpoint: str | None = None
 ) -> DataFrame:
-    """Execute a streaming DataFrame with Trigger.AvailableNow into a
-    memory sink and return the materialized table.
-
-    Each stateful operator runs one state store per core.  The shuffle
-    setting that sizes them is captured when ``start()`` constructs the
-    query (:func:`start_memory_query`), and the count then stays fixed
-    for the life of the query's checkpoint.  Going from 8 stores to 4 on
-    a 4-vCPU host (Spark 4.1.2, ``local[4]``) cut the ``windows_replay``
-    benchmark's median ``cpu_ms_per_op`` from 3724 to 2707 ms (-27%,
-    10 interleaved pairs), with state commit time per batch and tasks
-    per batch both roughly halved."""
-    start_memory_query(df, name, output_mode, checkpoint).awaitTermination()
+    """Run a streaming DataFrame to completion into the memory table
+    ``name`` (:func:`run_stream`) and return that table."""
+    run_stream(df, name=name, output_mode=output_mode, checkpoint=checkpoint)
     return df.sparkSession.table(name)
 
 
@@ -774,13 +785,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(cdc_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_path("ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, apply_batch, checkpoint=scratch_path("ckpt_"))
     return spark.read.parquet(_latest()).orderBy("c_custkey", "valid_from")
 
 
@@ -800,13 +805,7 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     def count_batch(df: DataFrame, batch_id: int) -> None:
         batches.append((batch_id, df.count()))
 
-    q = (
-        tagged.writeStream.foreachBatch(count_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_path("ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(tagged, count_batch, checkpoint=scratch_path("ckpt_"))
     return spark.createDataFrame(
         sorted(batches), "batch_id long, n_rows long"
     )
@@ -871,13 +870,7 @@ def stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(store, f"v{batch_id:06d}")
         )
 
-    q = (
-        src.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_path("ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, merge, checkpoint=scratch_path("ckpt_"))
     hourly = spark.read.parquet(os.path.join(store, _versions()[-1]))
     return (
         hourly.groupBy(
@@ -1259,13 +1252,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(store, f"v{batch_id:06d}")
         )
 
-    q = (
-        src.writeStream.foreachBatch(apply_cdc)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_path("ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, apply_cdc, checkpoint=scratch_path("ckpt_"))
     state = spark.read.parquet(os.path.join(store, _versions()[-1]))
     return (
         state.where(~F.col("st.is_delete"))
@@ -1303,10 +1290,12 @@ def stream_watermark_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "6 hours").alias("win"))
         .agg(F.count("*").alias("n"))
     )
-    q = start_memory_query(
-        agg, "stream_watermark_metrics_sink", "update", scratch_path("ckpt_")
+    q = run_stream(
+        agg,
+        name="stream_watermark_metrics_sink",
+        output_mode="update",
+        checkpoint=scratch_path("ckpt_"),
     )
-    q.awaitTermination()
     rows = []
     for p in q.recentProgress:
         ops = p.get("stateOperators") or []
@@ -1342,10 +1331,12 @@ def stream_autoscale_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, stage_stream_dir(spark, sf_dir), max_files_per_trigger=1
     )
     agg = src.groupBy("event_type").agg(F.count("*").alias("n"))
-    q = start_memory_query(
-        agg, "stream_autoscale_sink", "complete", scratch_path("ckpt_")
+    q = run_stream(
+        agg,
+        name="stream_autoscale_sink",
+        output_mode="complete",
+        checkpoint=scratch_path("ckpt_"),
     )
-    q.awaitTermination()
     rows = []
     for p in q.recentProgress:
         in_rate = float(p.get("inputRowsPerSecond") or 0.0)
@@ -1446,13 +1437,7 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    q = (
-        checked.writeStream.foreachBatch(route)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_path("ckpt_dlq_"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(checked, route, checkpoint=scratch_path("ckpt_dlq_"))
     valid = spark.read.parquet(valid_dir).select(
         F.lit("valid").alias("route"), F.lit("ok").alias("reason")
     )
@@ -1594,13 +1579,7 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(store, f"v{batch_id:06d}")
         )
 
-    q = (
-        src.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_path("ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, merge, checkpoint=scratch_path("ckpt_"))
     cells = spark.read.parquet(os.path.join(store, _versions()[-1]))
     return cells.select(
         F.col("i").cast("long").alias("i"),

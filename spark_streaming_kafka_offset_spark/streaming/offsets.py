@@ -40,7 +40,7 @@ from pyspark.sql.window import Window
 
 from ..plans.registry import register
 from ..session import load_table
-from .core import EVENT_SCHEMA, read_event_stream, stage_stream_dir
+from .core import EVENT_SCHEMA, read_event_stream, run_stream, stage_stream_dir
 
 from ..common import scratch_path
 
@@ -125,13 +125,7 @@ def run_ledgered_stream(
     ledgered sink; resumable via ``checkpoint``."""
     ledger = OffsetLedger(root)
     src = read_event_stream(spark, stream_dir, max_files_per_trigger)
-    q = (
-        src.writeStream.foreachBatch(ledger.process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, ledger.process, checkpoint=checkpoint)
     return ledger
 
 
@@ -338,13 +332,7 @@ def stream_offset_rewind(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = read_event_stream(spark, stream_dir, max_files_per_trigger=None).where(
         F.col("event_id") > resume_offset
     )
-    q = (
-        src.writeStream.foreachBatch(replay.process)
-        .option("checkpointLocation", scratch_path("ckpt_rw2_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, replay.process, checkpoint=scratch_path("ckpt_rw2_"))
 
     def phase(name: str, df: DataFrame) -> DataFrame:
         return df.agg(
@@ -650,13 +638,7 @@ def run_txn_exactly_once(
     src = read_event_stream(
         spark, stage_stream_dir(spark, sf_dir), max_files_per_trigger=1
     )
-    (
-        src.writeStream.foreachBatch(commit_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-        .awaitTermination()
-    )
+    run_stream(src, commit_batch, checkpoint=checkpoint)
 
 
 @register("stream_txn_exactly_once")

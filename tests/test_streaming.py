@@ -102,19 +102,20 @@ def test_dedup_restores_exactly_once_counts(spark):
 
 def test_state_stores_one_per_core_conf_restored_at_start(spark):
     """A two-operator stateful stream (watermark dedup, then a count)
-    started through the engine's helper runs one state store per core
+    started through the engine's runner runs one state store per core
     on every operator, and the session's shuffle setting is back to its
-    own value as soon as ``start()`` returns, not when the run ends.
+    own value as soon as ``start()`` returns, not when the run ends: a
+    ``foreachBatch`` function reading the session conf mid-run sees the
+    session's value, while its batch runs in the query's per-core clone.
     The fixture session has 8 shuffle partitions, more than its cores,
     so a count taken from the session conf, or a swap held for the
     whole run, both show."""
     from spark_streaming_kafka_offset_spark.common import scratch_path
-    from spark_streaming_kafka_offset_spark.streaming.core import (
-        start_memory_query,
-    )
+    from spark_streaming_kafka_offset_spark.streaming.core import run_stream
 
+    key = "spark.sql.shuffle.partitions"
     cores = spark.sparkContext.defaultParallelism
-    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    session_parts = spark.conf.get(key)
     assert session_parts != str(cores)
     src = read_event_stream(spark, stage_stream_dir(spark, SF_DIR))
     doubled = src.withColumn(
@@ -126,11 +127,13 @@ def test_state_stores_one_per_core_conf_restored_at_start(spark):
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
     )
-    q = start_memory_query(
-        counted, "state_store_sizing", "complete", scratch_path("ckpt_")
+    q = run_stream(
+        counted,
+        name="state_store_sizing",
+        output_mode="complete",
+        checkpoint=scratch_path("ckpt_"),
     )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == session_parts
-    q.awaitTermination()
+    assert spark.conf.get(key) == session_parts
 
     ops = [o for p in q.recentProgress for o in p["stateOperators"]]
     assert len({o["operatorName"] for o in ops}) == 2
@@ -147,6 +150,106 @@ def test_state_stores_one_per_core_conf_restored_at_start(spark):
         .collect()
     }
     assert streamed == batch
+
+    seen_session, seen_batch = set(), set()
+
+    def read_conf(batch_df, batch_id):
+        seen_session.add(spark.conf.get(key))
+        seen_batch.add(batch_df.sparkSession.conf.get(key))
+
+    run_stream(
+        read_event_stream(
+            spark, stage_stream_dir(spark, SF_DIR), max_files_per_trigger=1
+        ),
+        read_conf,
+        checkpoint=scratch_path("ckpt_"),
+    )
+    assert seen_session == {session_parts}
+    assert seen_batch == {str(cores)}
+
+
+def test_failed_start_leaves_session_clean(spark):
+    """A start that Spark rejects (complete mode with no aggregation)
+    raises at ``start()``, restores the session's shuffle setting and
+    releases the start lock, so the next stream runs."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from spark_streaming_kafka_offset_spark.streaming import core
+
+    key = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(key)
+    src = read_event_stream(spark, stage_stream_dir(spark, SF_DIR))
+    with pytest.raises(AnalysisException):
+        core.run_stream(src, name="failed_start", output_mode="complete")
+    assert spark.conf.get(key) == session_parts
+    assert not core._START_LOCK.locked()
+    core.run_stream(src.select("event_id"), name="after_failed_start")
+    assert spark.table("after_failed_start").count() == _batch_events(spark).count()
+    assert spark.conf.get(key) == session_parts
+
+
+def test_engine_starts_streams_only_through_run_stream():
+    """``.writeStream`` is touched in exactly one engine function,
+    ``streaming.core.run_stream``: every engine stream gets its trigger,
+    checkpoint and state-store sizing from the one runner."""
+    import ast
+    from pathlib import Path
+
+    import spark_streaming_kafka_offset_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    hits = []
+
+    def walk(node, path, func):
+        for child in ast.iter_child_nodes(node):
+            inner = func
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if isinstance(child, ast.Attribute) and child.attr == "writeStream":
+                hits.append((path, inner))
+            walk(child, path, inner)
+
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        walk(ast.parse(f.read_text(), rel), rel, None)
+    assert hits == [("streaming/core.py", "run_stream")]
+
+
+def test_rate_limit_batches_equal_staged_chunks(spark):
+    """``maxFilesPerTrigger=1`` over the 4 staged chunk files runs one
+    micro-batch per file, in discovery order: batch i holds exactly the
+    rows of chunk i (``event_id % 4 == i``)."""
+    streamed = [
+        (r["batch_id"], r["n_rows"])
+        for r in QUERIES["stream_rate_limit"](spark, SF_DIR).collect()
+    ]
+    batch = [
+        (r["chunk"], r["count"])
+        for r in _batch_events(spark)
+        .groupBy((F.col("event_id") % 4).alias("chunk"))
+        .count()
+        .orderBy("chunk")
+        .collect()
+    ]
+    assert len(batch) == 4
+    assert streamed == batch
+
+
+def test_sink_foreachbatch_equals_batch(spark):
+    """With no rate limit the staged stream drains as one batch, and the
+    ``foreachBatch`` sink's count and rounded value sum equal the batch
+    aggregate over the same rows."""
+    streamed = [
+        (r["batch_id"], r["n_rows"], r["total_value"])
+        for r in QUERIES["sink_foreachbatch"](spark, SF_DIR).collect()
+    ]
+    want = (
+        _batch_events(spark)
+        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("v"))
+        .collect()[0]
+    )
+    assert streamed == [(0, want["n"], want["v"])]
 
 
 def test_concurrent_run_to_completion_restores_session_conf(spark):
