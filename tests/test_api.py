@@ -87,3 +87,19 @@ def test_observed_metrics_are_real_numbers(spark):
     assert m["obs_null_qty"] == 0
     assert m["obs_min_qty"] <= m["obs_max_qty"]
     assert m["rollup_groups"] >= 2
+
+
+def test_local_session_jvm_runs_engine_jit_thresholds(spark):
+    """``get_spark``'s C2 thresholds reach the live driver JVM, not only the
+    conf: a competing ``extraJavaOptions`` or a wrong conf key would leave
+    the JVM on its defaults."""
+    from spark_streaming_kafka_offset_spark import session as S
+
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    want = dict(opt[len("-XX:"):].split("=") for opt in S.LOCAL_JIT_OPTIONS.split())
+    assert "Tier4InvocationThreshold" in want
+    got = {name: bean.getVMOption(name).getValue() for name in want}
+    assert got == want
