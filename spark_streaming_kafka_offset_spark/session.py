@@ -126,6 +126,29 @@ def get_spark(
     ``-XX:CICompilerCount=2`` made warm passes slower.
     Correctness never depends on the flags: a driver-built session runs
     the default JIT.
+
+    Local masters also publish checkpoint files (offset WAL, commits,
+    state-store deltas and snapshots) through Spark's FileSystem-API
+    manager, ``FileSystemBasedCheckpointFileManager``, on Hadoop's own
+    ``LocalFileSystem``.  Spark's default FileContext manager renames
+    through ``AbstractFileSystem.rename``, which resolves symlinks with
+    ``FileUtil.readLink``; with no native Hadoop library that forks a
+    ``readlink`` process, four per checkpoint file, 166 of the 209
+    processes a ``windows_replay`` batch spawned.  ``fs.file.impl``
+    guards correctness: on PySpark's classpath ``file:`` otherwise
+    resolves to Hive's ``ProxyLocalFileSystem`` (registered by
+    ``hive-exec``), whose ``rename`` returns false when the destination
+    file exists, so an overwriting checkpoint write, such as a state
+    delta rewritten when a batch replays, would be dropped and its temp
+    file left behind.  ``LocalFileSystem.rename`` replaces the file
+    atomically, as FileContext's ``OVERWRITE`` rename does.  Non-local
+    masters keep FileContext, because on HDFS ``FileSystem.rename`` does
+    not overwrite.  Spark's checkpoint checksum files and Hadoop's
+    ``.crc`` files stay.  Measured with ``perfbench`` (4 vCPU, ``local[4]``,
+    interleaved fresh-process pairs, medians): ``windows_replay``
+    ``cpu_ms_per_op`` 2418 → 1768 ms (−27%, 10/10 pairs); traced,
+    ``streaming.state.commit_ms`` 627 → 47 and executor run time
+    1316 → 666 ms at unchanged executor CPU (252 → 247 ms).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -151,6 +174,12 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"),
         ).config("spark.driver.defaultJavaOptions", LOCAL_JIT_OPTIONS)
+        # Checkpoints without readlink spawns; see the docstring.
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        ).config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
     elif os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES"):
         builder = builder.config(
             "spark.sql.files.maxPartitionBytes",

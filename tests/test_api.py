@@ -103,3 +103,32 @@ def test_local_session_jvm_runs_engine_jit_thresholds(spark):
     assert "Tier4InvocationThreshold" in want
     got = {name: bean.getVMOption(name).getValue() for name in want}
     assert got == want
+
+
+def test_local_session_publishes_checkpoints_through_local_filesystem(spark, tmp_path):
+    """``get_spark``'s checkpoint confs reach the session's Hadoop conf:
+    checkpoint files go through Spark's FileSystem-API manager on Hadoop's
+    own ``LocalFileSystem``, and an overwriting atomic write replaces the
+    file.  Hive's ``ProxyLocalFileSystem``, which ``file:`` resolves to
+    without the second conf, drops that write and leaves its temp file."""
+    import os
+
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    Path = jvm.org.apache.hadoop.fs.Path
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(Path(str(tmp_path)), conf)
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    fs = Path(str(tmp_path)).getFileSystem(conf)
+    assert fs.getClass().getName() == "org.apache.hadoop.fs.LocalFileSystem"
+
+    target = Path(str(tmp_path / "1"))
+    for payload in (b"first write", b"second"):
+        out = manager.createAtomic(target, True)
+        out.write(bytearray(payload))
+        out.close()
+    assert (tmp_path / "1").read_bytes() == b"second"
+    assert not [f for f in os.listdir(tmp_path) if ".tmp" in f]

@@ -464,6 +464,68 @@ def test_stateful_values_close_to_batch(spark):
         assert abs(streamed[uid] - tv) < 0.02
 
 
+def test_stateful_replay_after_sink_crash_leaves_no_temp_files(spark, tmp_path):
+    """Stateful crash cell: the sink fails once after collecting batch 1,
+    that is after batch 1's state commit and before its WAL commit.  The
+    restart on the same checkpoint replays batch 1, which rewrites the
+    state deltas it already committed.  The folded updates equal the
+    batch aggregate, and every checkpoint write was published: no
+    ``*.tmp`` (or its ``.crc``) is left behind, as a rename that refuses
+    to overwrite would leave."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from spark_streaming_kafka_offset_spark.streaming.core import run_stream
+
+    src = read_event_stream(
+        spark, stage_stream_dir(spark, SF_DIR, n_chunks=3), max_files_per_trigger=1
+    )
+    agg = src.groupBy("event_type").agg(
+        F.count("*").alias("n"), F.sum("value").alias("v")
+    )
+    ckpt = str(tmp_path / "ckpt")
+    batches: dict[int, list] = {}
+    crashes = []
+
+    def sink(batch_df, batch_id):
+        batches[batch_id] = [
+            (r["event_type"], r["n"], r["v"]) for r in batch_df.collect()
+        ]
+        if batch_id == 1 and not crashes:
+            crashes.append(batch_id)
+            raise RuntimeError("injected sink crash")
+
+    with pytest.raises(StreamingQueryException, match="injected sink crash"):
+        run_stream(agg, sink, output_mode="update", checkpoint=ckpt)
+    run_stream(agg, sink, output_mode="update", checkpoint=ckpt)
+    assert crashes == [1]
+    assert sorted(batches) == [0, 1, 2]
+
+    folded = {}
+    for batch_id in sorted(batches):
+        folded.update({k: (n, v) for k, n, v in batches[batch_id]})
+    want = {
+        r["event_type"]: (r["n"], r["v"])
+        for r in _batch_events(spark)
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n"), F.sum("value").alias("v"))
+        .collect()
+    }
+    assert folded.keys() == want.keys()
+    for k, (n, v) in want.items():
+        assert folded[k][0] == n
+        assert abs(folded[k][1] - v) < 0.01
+    leftovers = [
+        os.path.relpath(os.path.join(d, f), ckpt)
+        for d, _, files in os.walk(ckpt)
+        for f in files
+        if f.endswith((".tmp", ".tmp.crc"))
+    ]
+    assert leftovers == []
+
+
 def test_offset_ledger_exactly_once_across_restart(spark, tmp_path):
     """The reference's soul [K]: kill between batches, restart from the
     same checkpoint → sink holds each input row exactly once and the
