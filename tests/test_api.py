@@ -105,6 +105,33 @@ def test_local_session_jvm_runs_engine_jit_thresholds(spark):
     assert got == want
 
 
+def test_local_session_keeps_generated_classes_across_queries(spark):
+    """``get_spark`` sizes Spark's generated-class cache to
+    :data:`CODEGEN_CACHE_ENTRIES`: after more distinct generated classes
+    than Spark's default of 100, re-running the first query finds its
+    classes cached and runs Janino not at all."""
+    from spark_streaming_kafka_offset_spark import session as S
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        S.CODEGEN_CACHE_ENTRIES
+    )
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(i):
+        # The literals are inlined into the generated code: 2 classes per i.
+        spark.range(10).selectExpr(f"id * {i} + {i} AS v").collect()
+
+    run(1)
+    before = compiles.getCount()
+    for i in range(2, 77):
+        run(i)
+    assert compiles.getCount() - before > 100
+    before = compiles.getCount()
+    run(1)
+    assert compiles.getCount() - before == 0
+
+
 def test_local_session_publishes_checkpoints_through_local_filesystem(spark, tmp_path):
     """``get_spark``'s checkpoint confs reach the session's Hadoop conf:
     checkpoint files go through Spark's FileSystem-API manager on Hadoop's

@@ -5,10 +5,18 @@ flag that trades warm-up cost for slower warm code (C1-only compilation
 wins there yet runs warm passes 35-60% longer).  This probe builds one
 ``session.get_spark`` session and then builds and collects the same five
 sf0.1 queries ``PASSES`` times in it.  It prints CPU seconds (the Python
-driver, the JVM and Spark's Python workers) and wall seconds per pass,
-then the medians and interquartile ranges of passes 5-10, where the JIT
-has settled.  Compare a change with its parent in one fresh process per
-side, run back to back.
+driver, the JVM and Spark's Python workers), wall seconds, Janino compiles
+and Janino compile milliseconds per pass, then the medians and
+interquartile ranges of passes 5-10, where the JIT has settled.  Compare
+a change with its parent in one fresh process per side, run back to back.
+
+The compile figures come from Spark's own counters
+(``CodegenMetrics.METRIC_COMPILATION_TIME`` and
+``CodeGenerator.compileTime``), which count each generated class that
+missed Spark's JVM-wide class cache.  The five queries generate 68
+classes, which fit even Spark's default 100-entry cache, so warm passes
+compile nothing on either side of a cache-size change; a codegen change
+that makes warm passes recompile shows as non-zero compiles here.
 
 Usage:  python tools/probe_jit_steady.py [sf_dir]
 """
@@ -65,16 +73,25 @@ def main() -> int:
 
     qs = entrymod.queries()
     spark = S.get_spark("probe-jit-steady")
-    rows: list[tuple[float, float]] = []
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    rows: list[tuple[float, float, int, float]] = []
     for i in range(1, PASSES + 1):
         c0, w0 = tree_cpu_s(), time.monotonic()
+        n0, ns0 = compiles.getCount(), codegen.compileTime()
         for key in KEYS:
             qs[key](spark, sf_dir).collect()
         cpu, wall = tree_cpu_s() - c0, time.monotonic() - w0
-        rows.append((cpu, wall))
-        print(f"pass {i:2d}  cpu_s {cpu:6.2f}  wall_s {wall:6.2f}", flush=True)
+        n, ms = compiles.getCount() - n0, (codegen.compileTime() - ns0) / 1e6
+        rows.append((cpu, wall, n, ms))
+        print(
+            f"pass {i:2d}  cpu_s {cpu:6.2f}  wall_s {wall:6.2f}"
+            f"  compiles {n:4d}  compile_ms {ms:7.1f}",
+            flush=True,
+        )
     summary: dict[str, object] = {"sf_dir": sf_dir, "passes": PASSES - STEADY_FROM + 1}
-    for i, name in enumerate(("cpu_s", "wall_s")):
+    for i, name in enumerate(("cpu_s", "wall_s", "compiles", "compile_ms")):
         steady = [r[i] for r in rows[STEADY_FROM - 1:]]
         q1, _, q3 = statistics.quantiles(steady, n=4, method="inclusive")
         summary[f"{name}_median"] = round(statistics.median(steady), 2)
