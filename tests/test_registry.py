@@ -74,7 +74,7 @@ def test_window_targets_stalest_oracle_keys():
     named in REPROOF_VOID count as never-proven while their newest row
     is at or below the voided round — ledger rows proving superseded
     semantics are not evidence), with any arithmetic overflow (more
-    stalest-tier keys than slots) named explicitly in DEFERRED_R16.
+    stalest-tier keys than slots) named explicitly in DEFERRED_R17.
     This makes every future round's queue auto-derivable from the
     ledgers: sort oracle keys by effective newest hard row ascending,
     take 50, name the spillover."""
@@ -83,7 +83,7 @@ def test_window_targets_stalest_oracle_keys():
     import os
 
     from spark_streaming_kafka_offset_spark.plans.registry import (
-        DEFERRED_R16,
+        DEFERRED_R17,
         REPROOF_VOID,
     )
 
@@ -108,10 +108,10 @@ def test_window_targets_stalest_oracle_keys():
         )
 
     window = set(DRIVER_PRIORITY[:WINDOW])
-    assert set(DEFERRED_R16) <= set(ORACLE_SQL)
-    assert not set(DEFERRED_R16) & window, "deferred keys cannot be in-window"
+    assert set(DEFERRED_R17) <= set(ORACLE_SQL)
+    assert not set(DEFERRED_R17) & window, "deferred keys cannot be in-window"
 
-    outside = set(ORACLE_SQL) - window - set(DEFERRED_R16)
+    outside = set(ORACLE_SQL) - window - set(DEFERRED_R17)
     max_in = max(effective(k) for k in window)
     min_out = min(effective(k) for k in outside)
     assert max_in <= min_out, (
@@ -122,6 +122,6 @@ def test_window_targets_stalest_oracle_keys():
     )
     # every never-proven oracle key is accounted for: in-window or deferred
     never = {k for k in ORACLE_SQL if effective(k) == 0}
-    assert never <= window | set(DEFERRED_R16), sorted(
-        never - window - set(DEFERRED_R16)
+    assert never <= window | set(DEFERRED_R17), sorted(
+        never - window - set(DEFERRED_R17)
     )
