@@ -42,11 +42,11 @@ def txn_commit(
 ) -> int:
     """Atomically publish ``files`` as the next version; returns it.
 
-    ``extra`` rides INSIDE the commit record — the hook the
-    exactly-once streaming sink uses to co-commit source offsets with
-    the data they produced (the store-offsets-with-results recipe [K]):
-    one atomic rename publishes both, so a crash between data write
-    and offset update is unrepresentable."""
+    ``extra`` rides INSIDE the commit record: ``txn_compact`` publishes
+    its REPLACE commit (``op`` and the ``removed`` files) through it.
+    The record lands by one ``os.rename``, so a reader sees the whole
+    commit or none of it; losing the race for a version number retries
+    with the next one."""
     log_dir = os.path.join(table_dir, "_log")
     os.makedirs(log_dir, exist_ok=True)
     while True:
@@ -68,24 +68,40 @@ def txn_commit(
         return v
 
 
+def _log_records(table_dir: str) -> list[dict]:
+    """Every commit record of the table, in version order."""
+    log_dir = os.path.join(table_dir, "_log")
+    recs = []
+    for name in sorted(f for f in os.listdir(log_dir) if f.endswith(".json")):
+        with open(os.path.join(log_dir, name)) as fh:
+            recs.append(json.load(fh))
+    return recs
+
+
+def _live_files(records: list[dict]) -> list[str]:
+    """Data file names in the snapshot after ``records``: each commit's
+    ``files`` added, its ``removed`` (a REPLACE) dropped."""
+    live: list[str] = []
+    for rec in records:
+        gone = set(rec.get("removed", []))
+        live = [f for f in live if f not in gone]
+        live.extend(rec["files"])
+    return live
+
+
 def txn_read(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
     """Snapshot read: exactly the files committed at versions ≤ version."""
-    log_dir = os.path.join(table_dir, "_log")
-    commits = sorted(
-        f for f in os.listdir(log_dir) if f.endswith(".json")
+    recs = [
+        r
+        for r in _log_records(table_dir)
+        if version is None or r["version"] <= version
+    ]
+    data_dir = os.path.join(table_dir, "data")
+    return spark.read.parquet(
+        *(os.path.join(data_dir, f) for f in _live_files(recs))
     )
-    files: list[str] = []
-    for c in commits:
-        with open(os.path.join(log_dir, c)) as fh:
-            rec = json.load(fh)
-        if version is not None and rec["version"] > version:
-            continue
-        for gone in rec.get("removed", []):
-            files = [f for f in files if not f.endswith(gone)]
-        files.extend(os.path.join(table_dir, "data", f) for f in rec["files"])
-    return spark.read.parquet(*files)
 
 
 def _write_data_files(
@@ -162,11 +178,8 @@ def txn_read_incremental(
     — the consumption contract of lakehouse streaming sources (each
     commit is a micro-batch; the reader's offset is a version number,
     exactly the manual-offset-store recipe [K] applied to a table)."""
-    log_dir = os.path.join(table_dir, "_log")
     files: list[str] = []
-    for c in sorted(f for f in os.listdir(log_dir) if f.endswith(".json")):
-        with open(os.path.join(log_dir, c)) as fh:
-            rec = json.load(fh)
+    for rec in _log_records(table_dir):
         if rec["version"] <= after:
             continue
         if until is not None and rec["version"] > until:
@@ -188,36 +201,10 @@ def txn_compact(spark: SparkSession, table_dir: str) -> int:
     table unreadable (the OPTIMIZE/rewrite_data_files maintenance op)."""
     current = txn_read(spark, table_dir)
     new_files, n_rows = _write_data_files(current, table_dir, 1)
-    log_dir = os.path.join(table_dir, "_log")
-    removed: list[str] = []
-    for c in sorted(f for f in os.listdir(log_dir) if f.endswith(".json")):
-        with open(os.path.join(log_dir, c)) as fh:
-            rec = json.load(fh)
-        removed.extend(rec["files"])
-        removed = [f for f in removed if f not in set(rec.get("removed", []))]
-    while True:
-        versions = [
-            int(f[:-5]) for f in os.listdir(log_dir) if f.endswith(".json")
-        ]
-        v = max(versions) + 1
-        tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": v,
-                    "op": "replace",
-                    "files": new_files,
-                    "removed": removed,
-                    "n_rows": n_rows,
-                },
-                fh,
-            )
-        target = os.path.join(log_dir, f"{v:06d}.json")
-        if os.path.exists(target):
-            os.unlink(tmp)
-            continue
-        os.rename(tmp, target)
-        return v
+    removed = _live_files(_log_records(table_dir))
+    return txn_commit(
+        table_dir, new_files, n_rows, extra={"op": "replace", "removed": removed}
+    )
 
 
 @register("scan_txn_maintenance")  # rows-only: commit-protocol runtime semantics
@@ -283,16 +270,9 @@ def vacuum_plan(table_dir: str) -> list[tuple[str, str, str]]:
     in NO commit record — a crashed writer's leftovers), and action =
     keep for live, vacuum for the rest under a retain-nothing policy.
     Pure log+listing arithmetic: never opens a data file."""
-    log_dir = os.path.join(table_dir, "_log")
-    committed: set[str] = set()
-    live: list[str] = []
-    for c in sorted(f for f in os.listdir(log_dir) if f.endswith(".json")):
-        with open(os.path.join(log_dir, c)) as fh:
-            rec = json.load(fh)
-        committed.update(rec["files"])
-        live = [f for f in live if f not in set(rec.get("removed", []))]
-        live.extend(rec["files"])
-    live_set = set(live)
+    recs = _log_records(table_dir)
+    committed = {f for rec in recs for f in rec["files"]}
+    live_set = set(_live_files(recs))
     out = []
     for f in sorted(os.listdir(os.path.join(table_dir, "data"))):
         if not f.endswith(".parquet"):
@@ -310,8 +290,8 @@ def vacuum_plan(table_dir: str) -> list[tuple[str, str, str]]:
 def table_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VACUUM planning for the transaction-log table — the janitor that
     completes the lakehouse maintenance story (`txn_compact` rewrites,
-    `stream_txn_exactly_once` leaves crash orphans, THIS op finds what
-    is safe to delete): stage a table with two appends, one compaction
+    a writer that dies before its commit leaves orphans, THIS op finds
+    what is safe to delete): stage a table with two appends, one compaction
     REPLACE, and one uncommitted (orphaned) write, then classify every
     physical file as live / superseded / orphan from the commit log
     alone and emit the per-class plan.  Safety property (pinned by

@@ -13,10 +13,15 @@ Spark-first restatement, with the engine doing the hard half:
   Restart with the same checkpointLocation and the stream replays the
   exact uncommitted batch — the reference's ZK restore, minus the
   hand-rolled clamping.
-* **Exactly-once sink**: ``foreachBatch`` + batchId-keyed idempotent
-  writes.  A replayed batch overwrites its own partition directory
-  instead of appending duplicates.  The sink write is the batch's ONLY
-  Spark job: the ledger's count/min/max ride on it as a
+* **Exactly-once sink**: ``foreachBatch`` + batchId-keyed writes whose
+  commit record is the ledger row.  A batch id whose ledger row is
+  published (``ledger/batch_id=N/_SUCCESS``) is skipped on replay — the
+  rule of Spark's own ``FileStreamSink`` and its ``_spark_metadata``
+  log, safe because the WAL's ``offsets/N`` pins a replayed batch to the
+  same files.  Only an uncommitted batch is ever overwritten, and
+  ``read_sink`` reads committed batches only, so no reader sees a
+  missing, torn or duplicated batch.  The sink write is the batch's
+  ONLY Spark job: the ledger's count/min/max ride on it as a
   ``pyspark.sql.Observation``.
 * **Audit**: a parquet ledger row per (group, source, batch) mirroring
   the reference's ZK node content — queryable lineage of what was
@@ -25,13 +30,17 @@ Spark-first restatement, with the engine doing the hard half:
   after output) and publishes it with one atomic ``os.replace``, so a
   replay swaps the row and never deletes it first.
 
+One root belongs to one checkpoint: a fresh checkpoint over a used root
+commits nothing for the batch ids already committed there.
+
 The kill/restart exactly-once property is asserted by
-tests/test_streaming.py::test_offset_ledger_exactly_once_across_restart.
+tests/test_streaming.py::test_offset_ledger_exactly_once_across_restart
+and, with a torn uncommitted batch on disk, by
+test_ledger_crash_replay_commits_once_orphans_invisible.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -62,7 +71,7 @@ def ledger_arrow_schema():
 
 
 class OffsetLedger:
-    """batchId-keyed idempotent sink + offset-audit ledger.
+    """batchId-keyed exactly-once sink + offset-audit ledger.
 
     ``process(df, batch_id)`` is one Spark job: it writes the batch's rows
     to ``sink_dir/batch_id=N`` (mode=overwrite) while an ``Observation``
@@ -70,9 +79,17 @@ class OffsetLedger:
     after that write returns does the driver write the audit row with
     pyarrow to a hidden temp file in ``ledger_dir/batch_id=N/``, publish
     it with ``os.replace`` onto ``part-00000.parquet`` and touch
-    ``_SUCCESS`` last.  Re-running a batch (crash between sink write and
-    WAL commit) replaces rather than duplicates both — the idempotence
-    that turns at-least-once replay into exactly-once output.
+    ``_SUCCESS`` last.  That ``_SUCCESS`` is the batch's commit record:
+
+    * ``process`` returns at once for a batch id already committed, so a
+      replay after the ledger commit (crash before the WAL's
+      ``commits/N``) is a lookup, not a rewrite;
+    * a replay of an uncommitted batch overwrites its torn sink directory
+      and replaces rather than duplicates the ledger row;
+    * ``read_sink`` reads committed batch directories only.
+
+    One root belongs to one checkpoint: a fresh checkpoint over a used
+    root skips every batch id already committed there.
 
     ``root`` must be a local POSIX path, as for ``sources/txnlog.py``:
     the ledger publish is an ``os.replace``, atomic only there.
@@ -84,10 +101,23 @@ class OffsetLedger:
         self.group = group
         self.source = source
 
+    def committed_batch_ids(self) -> list[int]:
+        """Batch ids whose ledger row is published, ascending."""
+        if not os.path.isdir(self.ledger_dir):
+            return []
+        return sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(self.ledger_dir)
+            if os.path.exists(os.path.join(self.ledger_dir, d, "_SUCCESS"))
+        )
+
     def process(self, df: DataFrame, batch_id: int) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        part = os.path.join(self.ledger_dir, f"batch_id={batch_id}")
+        if os.path.exists(os.path.join(part, "_SUCCESS")):
+            return  # committed: a replay writes nothing
         obs = Observation()
         df.observe(
             obs,
@@ -98,7 +128,6 @@ class OffsetLedger:
             os.path.join(self.sink_dir, f"batch_id={batch_id}")
         )
         row = dict(obs.get, group=self.group, source=self.source, batch_id=batch_id)
-        part = os.path.join(self.ledger_dir, f"batch_id={batch_id}")
         os.makedirs(part, exist_ok=True)
         tmp = os.path.join(part, ".part-00000.parquet.tmp")
         pq.write_table(pa.Table.from_pylist([row], ledger_arrow_schema()), tmp)
@@ -111,7 +140,12 @@ class OffsetLedger:
         )
 
     def read_sink(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.sink_dir + "/batch_id=*")
+        return spark.read.parquet(
+            *(
+                os.path.join(self.sink_dir, f"batch_id={b}")
+                for b in self.committed_batch_ids()
+            )
+        )
 
 
 def run_ledgered_stream(
@@ -581,112 +615,34 @@ def stream_offset_commit_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_txn_exactly_once(
-    spark: SparkSession,
-    sf_dir: str,
-    table_dir: str,
-    checkpoint: str,
-    crash_after_write_in_batch: int | None = None,
-) -> None:
-    """Drive the events file-stream into a transactional-log table with
-    source offsets CO-COMMITTED inside each version's commit record —
-    the store-offsets-with-results recipe [K] that upgrades foreachBatch
-    replay (at-least-once) to exactly-once without an idempotent-path
-    convention: the gate is the durable offset in the log itself, not a
-    directory-overwrite trick.
-
-    Per batch: (1) read the max committed batch offset from the commit
-    records (one pass over the JSON log — version-count-sized, never
-    data-sized); (2) if this batch_id is already committed, SKIP — the
-    replay gate; (3) write the batch's data files INVISIBLY (visibility
-    comes only from the commit record); (4) txn_commit(files, n_rows,
-    extra={"batch_id": N}) — ONE atomic rename publishes data and
-    offset together, so "data written but offset lost" (the classic
-    duplicate source) is unrepresentable.
-
-    ``crash_after_write_in_batch`` injects the worst-case failure: die
-    AFTER the data files are on disk but BEFORE the commit — the window
-    where a separate offset store would double-count on replay.  The
-    orphaned files stay in data/ (invisible; compaction's janitor
-    problem) and the replay re-writes and commits exactly once."""
-    from ..sources.txnlog import _write_data_files, txn_commit
-
-    def committed_batches() -> set[int]:
-        log_dir = os.path.join(table_dir, "_log")
-        if not os.path.isdir(log_dir):
-            return set()
-        out = set()
-        for f in os.listdir(log_dir):
-            if f.endswith(".json"):
-                with open(os.path.join(log_dir, f)) as fh:
-                    rec = json.load(fh)
-                if "batch_id" in rec:
-                    out.add(int(rec["batch_id"]))
-        return out
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed_batches():
-            return  # replay of an already-committed batch: exactly-once gate
-        files, n = _write_data_files(batch_df, table_dir, n_files=1)
-        if crash_after_write_in_batch == batch_id:
-            raise RuntimeError(
-                f"injected crash after data write, before commit "
-                f"(batch {batch_id})"
-            )
-        txn_commit(table_dir, files, n, extra={"batch_id": batch_id})
-
-    src = read_event_stream(
-        spark, stage_stream_dir(spark, sf_dir), max_files_per_trigger=1
-    )
-    run_stream(src, commit_batch, checkpoint=checkpoint)
-
-
 @register("stream_txn_exactly_once")
 def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-once streaming ingest via offset/data co-commit: run the
-    events stream through `run_txn_exactly_once` (each micro-batch's
-    source offset rides INSIDE the transaction-log commit record that
-    publishes its data files — one atomic rename, so at-least-once
-    replay can never double-ingest) and return the commit audit: one
-    row per version with its co-committed batch offset, row count, and
-    the running total.  The crash-replay property (die between data
-    write and commit → replay commits exactly once, orphans stay
-    invisible) is pinned by
-    tests/test_streaming.py::test_txn_exactly_once_crash_replay.
+    """Exactly-once streaming ingest audit: run the 4-chunk events
+    stream one file per batch through the ledgered sink and return one
+    row per committed batch — ``version`` (= ``batch_id``, the commit
+    record's position), its row count, the parquet files in its sink
+    directory and the running row total.  The crash-replay property
+    (die with a torn batch on disk before its ledger commit → the replay
+    commits it exactly once, readers never see the torn write, and a
+    fresh checkpoint over the same root rewrites nothing) is pinned by
+    tests/test_streaming.py::test_ledger_crash_replay_commits_once_orphans_invisible.
 
-    Scale notes: the replay gate reads the JSON commit log
-    (version-count-sized); data files are written once per batch and
-    the audit readout is a version-count-sized frame.  This is the
-    offsets-in-the-sink half of the reference's contract [K]; the
-    ledger family (`stream_offset_ledger`) is the offsets-beside-the-
-    sink half — both ends of the Kafka offset-storage design space."""
-    table_dir = scratch_path("sskos_txn_eo_")
-    run_txn_exactly_once(
-        spark, sf_dir, table_dir, checkpoint=scratch_path("ckpt_")
+    Scale notes: the commit set is a listing of the ledger directory
+    (batch-count-sized); data files are written once per batch and the
+    audit readout is a batch-count-sized frame."""
+    ledger = run_ledgered_stream(
+        spark,
+        stage_stream_dir(spark, sf_dir),
+        scratch_path("sskos_txn_eo_"),
+        checkpoint=scratch_path("ckpt_"),
     )
-    log_dir = os.path.join(table_dir, "_log")
-    recs = []
-    for f in sorted(os.listdir(log_dir)):
-        if f.endswith(".json"):
-            with open(os.path.join(log_dir, f)) as fh:
-                recs.append(json.load(fh))
-    rows = [
-        (
-            int(r["version"]),
-            int(r["batch_id"]),
-            int(r["n_rows"]),
-            len(r["files"]),
-        )
-        for r in recs
-    ]
-    df = spark.createDataFrame(
-        rows, "version long, batch_id long, n_rows long, n_files long"
+    rows, cum_rows = [], 0
+    for r in ledger.read_ledger(spark).orderBy("batch_id").collect():
+        sink = os.path.join(ledger.sink_dir, f"batch_id={r.batch_id}")
+        n_files = sum(f.endswith(".parquet") for f in os.listdir(sink))
+        cum_rows += r.n_rows
+        rows.append((r.batch_id, r.batch_id, r.n_rows, n_files, cum_rows))
+    return spark.createDataFrame(
+        rows,
+        "version long, batch_id long, n_rows long, n_files long, cum_rows long",
     )
-    w = Window.orderBy("version").rowsBetween(Window.unboundedPreceding, 0)
-    return df.select(
-        "version",
-        "batch_id",
-        "n_rows",
-        "n_files",
-        F.sum("n_rows").over(w).cast("long").alias("cum_rows"),
-    ).orderBy("version")

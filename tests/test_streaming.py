@@ -548,13 +548,12 @@ def test_offset_ledger_exactly_once_across_restart(spark, tmp_path):
 
     deadline = time.monotonic() + 60
     while time.monotonic() < deadline:
-        if any(b == 0 for b in _committed_batches(spark, ledger)):
+        if 0 in ledger.committed_batch_ids():
             break
         time.sleep(0.3)
     q.stop()
     q.awaitTermination()
-    first_pass = set(_committed_batches(spark, ledger))
-    assert 0 in first_pass
+    assert 0 in ledger.committed_batch_ids()
 
     # Phase 2: restart from the same checkpoint; AvailableNow drains the rest.
     run_ledgered_stream(spark, stream_dir, root, ckpt, max_files_per_trigger=1)
@@ -572,9 +571,12 @@ def test_offset_ledger_on_disk_contract(spark, tmp_path):
     """The ledger layout that readers without Spark rely on: each
     ``ledger/batch_id=N/`` holds ``_SUCCESS`` and exactly one parquet
     file whose ``until_event_id`` pyarrow alone reads as the batch max,
-    in ``LEDGER_SCHEMA``'s columns.  Replaying the batch id replaces the
-    ledger row and the sink rows instead of adding to them, and leaves no
-    temp file behind."""
+    in ``LEDGER_SCHEMA``'s columns.  A replay of a batch id whose
+    ``_SUCCESS`` is gone (a kill between the ledger publish and
+    ``_SUCCESS``) rewrites it: the ledger row and the sink rows are
+    replaced, not added to, and no temp file is left behind.  (With
+    ``_SUCCESS`` present the replay is skipped, which
+    test_ledger_crash_replay_commits_once_orphans_invisible covers.)"""
     import os
 
     import pyarrow.parquet as pq
@@ -584,7 +586,9 @@ def test_offset_ledger_on_disk_contract(spark, tmp_path):
     ids = sorted(r["event_id"] for r in batch.collect())
     part = os.path.join(ledger.ledger_dir, "batch_id=5")
 
-    for _ in range(2):  # first run, then a replay of the same batch id
+    for attempt in range(2):  # first run, then a replay of the same batch id
+        if attempt:  # killed before _SUCCESS: the batch is uncommitted
+            os.remove(os.path.join(part, "_SUCCESS"))
         ledger.process(batch, 5)
         files = os.listdir(part)
         parquet = [f for f in files if f.endswith(".parquet")]
@@ -602,15 +606,6 @@ def test_offset_ledger_on_disk_contract(spark, tmp_path):
     assert ledger.read_ledger(spark).schema == expected
     for d, _, files in os.walk(str(tmp_path / "contract")):
         assert not [f for f in files if f.endswith(".tmp")], f"temp file left in {d}"
-
-
-def _committed_batches(spark, ledger: OffsetLedger) -> list[int]:
-    try:
-        return [
-            r["batch_id"] for r in ledger.read_ledger(spark).collect()
-        ]
-    except Exception:
-        return []
 
 
 def test_stream_static_join_equals_batch(spark):
@@ -1616,67 +1611,72 @@ def test_stream_cms_equals_batch_cms(spark):
     assert sum(r.total for r in streamed) == 4 * e.count()
 
 
-def test_txn_exactly_once_crash_replay(spark):
-    """The offsets-in-the-commit sink must survive the worst-case crash
-    (data files written, commit not yet published): the replay re-writes
-    and commits the batch exactly once, the orphaned first write stays
-    invisible, and a from-scratch re-read (fresh checkpoint) commits
-    nothing new."""
-    import json
+def test_ledger_crash_replay_commits_once_orphans_invisible(spark, tmp_path):
+    """The ledger row is the sink's commit record, across the worst-case
+    crash (part of a batch on disk, its ledger row not yet published):
+    readers never see the torn write, the restart commits the batch
+    exactly once, and a fresh checkpoint over the same root rewrites no
+    committed batch."""
     import os
 
-    from spark_streaming_kafka_offset_spark.common import scratch_path
-    from spark_streaming_kafka_offset_spark.sources.txnlog import txn_read
-    from spark_streaming_kafka_offset_spark.streaming.offsets import (
-        run_txn_exactly_once,
-    )
-    from tests.conftest import SF_DIR
+    import pytest
 
-    table = scratch_path("txn_eo_test_")
-    ckpt = scratch_path("txn_eo_ckpt_")
+    from spark_streaming_kafka_offset_spark.streaming.core import run_stream
 
-    def committed():
-        log = os.path.join(table, "_log")
-        recs = []
-        for f in sorted(os.listdir(log)):
-            if f.endswith(".json"):
-                with open(os.path.join(log, f)) as fh:
-                    recs.append(json.load(fh))
-        return recs
+    stream_dir = stage_stream_dir(spark, SF_DIR)
+    root = str(tmp_path / "eo")
+    ckpt = str(tmp_path / "ckpt")
+    ledger = OffsetLedger(root)
+    want = sorted(r["event_id"] for r in _batch_events(spark).collect())
 
-    # 1. crash after batch 2's data write, before its commit
-    import pytest as _pytest
+    # 1. Batch 2 writes part of its rows into its sink directory and dies
+    # before process publishes the ledger row.
+    def torn_sink(df, batch_id):
+        if batch_id == 2:
+            df.limit(10).write.mode("overwrite").parquet(
+                os.path.join(ledger.sink_dir, "batch_id=2")
+            )
+            raise RuntimeError("injected crash before the ledger publish")
+        ledger.process(df, batch_id)
 
-    with _pytest.raises(Exception, match="injected crash"):
-        run_txn_exactly_once(
-            spark, SF_DIR, table, ckpt, crash_after_write_in_batch=2
-        )
-    recs = committed()
-    assert sorted(r["batch_id"] for r in recs) == [0, 1]
-    data_files = os.listdir(os.path.join(table, "data"))
-    committed_files = sum(len(r["files"]) for r in recs)
-    assert len(data_files) > committed_files  # the invisible orphan
+    src = read_event_stream(spark, stream_dir, max_files_per_trigger=1)
+    with pytest.raises(Exception, match="injected crash"):
+        run_stream(src, torn_sink, checkpoint=ckpt)
+    assert ledger.committed_batch_ids() == [0, 1]
+    torn = spark.read.parquet(os.path.join(ledger.sink_dir, "batch_id=2"))
+    assert torn.count() == 10  # the orphan is on disk ...
+    visible = [r["event_id"] for r in ledger.read_sink(spark).collect()]
+    assert len(visible) == 2 * len(want) // 4  # ... and invisible
+    assert set(visible) <= set(want)
 
-    # 2. resume with the SAME checkpoint: batch 2 replays, commits once
-    run_txn_exactly_once(spark, SF_DIR, table, ckpt)
-    recs = committed()
-    assert sorted(r["batch_id"] for r in recs) == [0, 1, 2, 3]
-    got = txn_read(spark, table)
-    want = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    assert got.count() == want.count()
-    assert (
-        got.select("event_id").distinct().count() == want.count()
-    ), "replay must not duplicate any event"
-    # orphan still on disk, still invisible
-    assert len(os.listdir(os.path.join(table, "data"))) > sum(
-        len(r["files"]) for r in recs
-    )
+    # 2. Restart on the same checkpoint: batch 2 replays and commits once.
+    run_ledgered_stream(spark, stream_dir, root, ckpt)
+    assert ledger.committed_batch_ids() == [0, 1, 2, 3]
+    sink_ids = sorted(r["event_id"] for r in ledger.read_sink(spark).collect())
+    assert sink_ids == want, "replay lost or duplicated rows"
 
-    # 3. from-scratch re-read (fresh checkpoint): the offset gate skips
-    # every batch — no new versions, no new rows
-    run_txn_exactly_once(spark, SF_DIR, table, scratch_path("txn_eo_ck2_"))
-    assert sorted(r["batch_id"] for r in committed()) == [0, 1, 2, 3]
-    assert txn_read(spark, table).count() == want.count()
+    # 3. A fresh checkpoint over the same root replays every batch id;
+    # each is already committed, so nothing is rewritten.
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_ino
+            for d, _, names in os.walk(root)
+            for f in names
+        }
+
+    before = files()
+    run_ledgered_stream(spark, stream_dir, root, str(tmp_path / "ckpt2"))
+    assert ledger.read_ledger(spark).count() == 4
+    assert files() == before, "a committed batch was rewritten"
+
+
+def test_stream_txn_exactly_once_audit(spark):
+    """The audit pins one committed batch per staged quarter of events:
+    (version, batch_id, n_rows, n_files, cum_rows) = (i, i, n/4, 1,
+    n/4 * (i + 1))."""
+    n = _batch_events(spark).count()
+    rows = [tuple(r) for r in QUERIES["stream_txn_exactly_once"](spark, SF_DIR).collect()]
+    assert rows == [(i, i, n // 4, 1, n // 4 * (i + 1)) for i in range(4)]
 
 
 def test_stream_full_outer_join_semantics(spark):
