@@ -155,7 +155,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.start_offset = int(options.get("start_offset", "0"))
 
         def partitions(self):
-            files = sorted(_glob.glob(self.path + "/chunk=*/*.parquet"))
+            files = sorted(_glob.glob(self.path + "/*.parquet"))
             return [InputPartition((i, f)) for i, f in enumerate(files)]
 
         def read(self, partition):
@@ -174,9 +174,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield from t.to_batches()
 
     spark.dataSource.register(_EventsFileSource)
-    from ..streaming.offsets import _range_chunked_stream_dir
-
-    stream_dir = _range_chunked_stream_dir(spark, sf_dir, n_chunks=4)
+    stream_dir = stage_stream_dir(spark, sf_dir)
     head = load_table(spark, sf_dir, "events").agg(
         F.max("event_id")
     ).first()[0]

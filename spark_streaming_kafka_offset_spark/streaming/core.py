@@ -127,17 +127,34 @@ def parse_kafka_events(raw: DataFrame) -> DataFrame:
 
 
 #: staged-dir cache: (sf_dir, n_chunks, late_chunk) → stream dir.  Every
-#: streaming query re-uses the same immutable staged copy within a process,
-#: so an N-query run pays the chunking write once.
+#: streaming query re-uses the same staged copy within a process, so an
+#: N-query run pays the chunking write once.  The dir is shared: a caller
+#: that deletes or adds files copies it (or the files it needs) first.
 _STAGE_CACHE: dict[tuple[str, int, bool], str] = {}
+
+
+def _range_chunks(tbl, id_col: str, n_chunks: int) -> list:
+    """Split an Arrow table into ``n_chunks`` contiguous ``id_col`` ranges:
+    with ``step = ceil((max + 1) / n_chunks)`` chunk i holds the ids in
+    ``[i·step, (i+1)·step)``, so each chunk's largest id is a true
+    high-watermark of everything staged before it."""
+    import pyarrow.compute as pc
+
+    step = -(-(pc.max(tbl[id_col]).as_py() + 1) // n_chunks)
+    chunk_of = pc.divide(tbl[id_col], step)  # non-negative ids: floor
+    return [tbl.filter(pc.equal(chunk_of, i)) for i in range(n_chunks)]
 
 
 def stage_stream_dir(
     spark: SparkSession, sf_dir: str, n_chunks: int = 4, late_chunk: bool = False
 ) -> str:
     """Deterministically chunk ``events`` into ``n_chunks`` parquet files
-    (chunk i = rows with event_id % n == i) under a temp dir, with
-    increasing mtimes so FileStreamSource discovers them in order.
+    ``0000.parquet …`` under a temp dir, with increasing mtimes so
+    FileStreamSource discovers them in order.  Chunk i holds the i-th
+    event_id range (:func:`_range_chunks`), the Kafka per-partition order:
+    one file per batch makes each ledger ``until_event_id`` a resume point
+    that covers every id at or below it.  Cached per process and shared
+    (see ``_STAGE_CACHE``).
 
     ``late_chunk=True`` puts the chronologically *earliest* quarter of
     rows into the last-discovered file — the out-of-order arrival used by
@@ -187,13 +204,7 @@ def stage_stream_dir(
             tbl.filter(pc.less(ts_i64, cut)),
         ]
     else:
-        mod = pc.subtract(
-            tbl["event_id"],
-            pc.multiply(
-                pc.divide(tbl["event_id"], n_chunks), n_chunks
-            ),  # arrow int divide truncates → this is event_id % n_chunks
-        )
-        chunks = [tbl.filter(pc.equal(mod, i)) for i in range(n_chunks)]
+        chunks = _range_chunks(tbl, "event_id", n_chunks)
     for i, chunk in enumerate(chunks):
         dest = os.path.join(stream_dir, f"{i:04d}.parquet")
         pq.write_table(chunk, dest)
@@ -970,29 +981,24 @@ def stage_embed_stream_dir(
     spark: SparkSession, sf_dir: str, n_chunks: int = 4
 ) -> str:
     """Chunk ``embeddings`` into ``n_chunks`` parquet files (chunk i =
-    rows with vec_id % n == i) under a temp dir with increasing mtimes —
-    the embedding-ingestion stand-in for a Kafka vector topic, exactly
-    the `stage_stream_dir` recipe on the vector table."""
+    the i-th vec_id range, :func:`_range_chunks`) under a temp dir with
+    increasing mtimes — the embedding-ingestion stand-in for a Kafka
+    vector topic, exactly the `stage_stream_dir` recipe on the vector
+    table."""
     cache_key = (sf_dir, n_chunks)
     cached = _EMBED_STAGE_CACHE.get(cache_key)
     if cached is not None and os.path.isdir(cached):
         return cached
-    import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(
         os.path.join(sf_dir, "embeddings.parquet"),
         columns=["vec_id", "embedding", "label"],
     )
-    mod = pc.subtract(
-        tbl["vec_id"],
-        pc.multiply(pc.divide(tbl["vec_id"], n_chunks), n_chunks),
-    )
     stream_dir = scratch_path("sskos_embstream_")
-    for i in range(n_chunks):
+    for i, chunk in enumerate(_range_chunks(tbl, "vec_id", n_chunks)):
         dest = os.path.join(stream_dir, f"{i:04d}.parquet")
-        pq.write_table(tbl.filter(pc.equal(mod, i)), dest)
+        pq.write_table(chunk, dest)
         os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     _EMBED_STAGE_CACHE[cache_key] = stream_dir
     return stream_dir
@@ -1464,8 +1470,8 @@ def stream_backfill_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries decomposable counts, not finished ratios).
 
     The cutover here is the event_id range boundary after the first two
-    of four range-staged chunks (a true high-watermark, cf.
-    `_range_chunked_stream_dir`); the stream side reads ONLY the
+    of four staged chunks (a true high-watermark, cf.
+    `stage_stream_dir`); the stream side reads ONLY copies of the
     post-cutover files and still goes through a real micro-batch
     pipeline.  The pytest twin asserts the stitched hourly rollup is
     row-identical to the one-shot batch rollup over the whole table —
@@ -1476,12 +1482,9 @@ def stream_backfill_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stitch re-aggregates two (hour × type)-sized partials — never
     facts.  At 100 TB the batch side reads the lake, the stream side
     Kafka-from-offset-C, and the stitch is this exact merge."""
-    import os
     import shutil
 
-    from .offsets import _range_chunked_stream_dir
-
-    chunks = _range_chunked_stream_dir(spark, sf_dir, n_chunks=4)
+    chunks = stage_stream_dir(spark, sf_dir)
     names = sorted(os.listdir(chunks))
     cutover = (
         spark.read.parquet(*[os.path.join(chunks, n) for n in names[:2]])
@@ -1497,7 +1500,7 @@ def stream_backfill_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fwd_dir = scratch_path("sskos_fwd_")
     for n in names[2:]:
-        shutil.copytree(os.path.join(chunks, n), os.path.join(fwd_dir, n))
+        shutil.copy2(os.path.join(chunks, n), fwd_dir)  # keeps the mtimes
     stream_part = hourly(
         read_event_stream(spark, fwd_dir, max_files_per_trigger=1)
     )

@@ -134,18 +134,21 @@ class OffsetLedger:
         os.replace(tmp, os.path.join(part, "part-00000.parquet"))
         open(os.path.join(part, "_SUCCESS"), "w").close()
 
+    def _committed_dirs(self, parent: str) -> list[str]:
+        return [
+            os.path.join(parent, f"batch_id={b}") for b in self.committed_batch_ids()
+        ]
+
     def read_ledger(self, spark: SparkSession) -> DataFrame:
-        return spark.read.schema(LEDGER_SCHEMA).parquet(
-            self.ledger_dir + "/batch_id=*"
-        )
+        """The committed ledger rows; empty, with ``LEDGER_SCHEMA``, before
+        the first commit."""
+        paths = self._committed_dirs(self.ledger_dir)
+        if not paths:
+            return spark.createDataFrame([], LEDGER_SCHEMA)
+        return spark.read.schema(LEDGER_SCHEMA).parquet(*paths)
 
     def read_sink(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(
-            *(
-                os.path.join(self.sink_dir, f"batch_id={b}")
-                for b in self.committed_batch_ids()
-            )
-        )
+        return spark.read.parquet(*self._committed_dirs(self.sink_dir))
 
 
 def run_ledgered_stream(
@@ -166,8 +169,10 @@ def run_ledgered_stream(
 @register("stream_offset_ledger")
 def stream_offset_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the 4-chunk events stream one file per batch through the
-    idempotent ledgered sink; return the audit ledger (4 rows, gap-free,
-    n_rows summing to the table row count)."""
+    idempotent ledgered sink; return the audit ledger: 4 rows, n_rows
+    summing to the table row count, gap-free — each batch is the next
+    event_id range, so ``min_event_id`` is the previous batch's
+    ``until_event_id`` + 1."""
     stream_dir = stage_stream_dir(spark, sf_dir)
     root = scratch_path("sskos_ledger_")
     ledger = run_ledgered_stream(
@@ -184,12 +189,9 @@ def stream_offset_lag_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs source head, lag, and a caught-up flag.
 
     Built by running the ledgered stream over a copied 2-chunk prefix
-    of the RANGE-chunked events layout (chunk i = the i-th event_id
-    range — ``_range_chunked_stream_dir``), then comparing the ledger's
-    max committed ``until_event_id`` against the full table's head.
-    Range chunks matter (ADVICE r4): under the mod-N split the prefix
-    contains every id class and ``until_event_id`` lands at ~head even
-    though half the rows are missing; with range chunks the committed
+    of the staged events (chunk i = the i-th event_id range,
+    ``stage_stream_dir``), then comparing the ledger's max committed
+    ``until_event_id`` against the full table's head.  The committed
     offset is a TRUE high-watermark, so lag/rows_behind/caught_up are
     meaningful consumer-lag numbers, not fixture accidents.  Rows-only:
     the ledger is runtime state DuckDB can't see.
@@ -201,13 +203,11 @@ def stream_offset_lag_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table's width."""
     import shutil
 
-    stream_dir = _range_chunked_stream_dir(spark, sf_dir, n_chunks=4)
+    stream_dir = stage_stream_dir(spark, sf_dir)
     # 2-chunk prefix = a consumer that has not caught up to the head.
     prefix_dir = scratch_path("sskos_lagprefix_")
     for name in sorted(os.listdir(stream_dir))[:2]:
-        shutil.copytree(
-            os.path.join(stream_dir, name), os.path.join(prefix_dir, name)
-        )
+        shutil.copy2(os.path.join(stream_dir, name), prefix_dir)
     ledger = run_ledgered_stream(
         spark, prefix_dir, scratch_path("sskos_lagledger_"),
         checkpoint=scratch_path("ckpt_lag_"),
@@ -235,30 +235,6 @@ def stream_offset_lag_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("committed_offset") >= F.col("head_offset")).alias("caught_up"),
         )
     )
-
-
-def _range_chunked_stream_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """Stage events as RANGE-partitioned chunk files (chunk i = the i-th
-    event_id range), unlike ``stage_stream_dir``'s mod-split: with range
-    chunks each batch's ``until_event_id`` is a true high-watermark, so
-    ledger offsets are meaningful resume points."""
-    import time
-
-    out = scratch_path("sskos_rangechunks_")
-    e = load_table(spark, sf_dir, "events")
-    hi = e.agg(F.max("event_id")).first()[0] + 1
-    step = -(-hi // n_chunks)
-    for i in range(n_chunks):
-        (
-            e.where(
-                (F.col("event_id") >= i * step) & (F.col("event_id") < (i + 1) * step)
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, f"chunk={i}"))
-        )
-        time.sleep(0.05)  # distinct mtimes → in-order discovery
-    return out
 
 
 class OffsetOutOfRangeError(RuntimeError):
@@ -345,7 +321,7 @@ def stream_offset_rewind(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the gate is a pushed-down scan filter here, exactly as Kafka's
     seek-to-offset skips log segments); ledger reads are batch-count
     sized."""
-    stream_dir = _range_chunked_stream_dir(spark, sf_dir, n_chunks=3)
+    stream_dir = stage_stream_dir(spark, sf_dir, n_chunks=3)
     full = run_ledgered_stream(
         spark,
         stream_dir,
@@ -436,7 +412,7 @@ def stream_offset_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: the ledger is one row per (group, source, batch);
     the audit is a lag window over that tiny frame — zero fact-table
     cost, run-anytime monitoring."""
-    stream_dir = _range_chunked_stream_dir(spark, sf_dir, n_chunks=4)
+    stream_dir = stage_stream_dir(spark, sf_dir)
     ledger = run_ledgered_stream(
         spark,
         stream_dir,

@@ -348,24 +348,20 @@ def stream_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly why `events_changepoint` exists as the OFFLINE split
     finder and this operator as its online counterpart.
 
-    Order discipline: CUSUM is order-sensitive, so the stream is staged
-    in event_id RANGE chunks (arrival order == time order — the Kafka
-    per-partition ordering contract [K]; same ADVICE-r4 lesson as the
-    lag monitor) and each batch folds in (ts, event_id) order.  The
-    fold itself is a shared function run by BOTH the operator and the
-    batch-equivalence test — the recurrence is the contract, not an
-    implementation detail.
+    Order discipline: CUSUM is order-sensitive, so it reads the staged
+    event_id RANGE chunks one file per batch (arrival order == id order
+    — the Kafka per-partition ordering contract [K], `stage_stream_dir`)
+    and each batch folds in (ts, event_id) order.  The fold itself is a
+    shared function run by BOTH the operator and the batch-equivalence
+    test — the recurrence is the contract, not an implementation
+    detail.
 
     Scale notes: state is 4 scalars per key (O(1), the stateful-op
     requirement); per-batch work is one in-memory fold per key over
     that batch's rows.  Keys here are event types; a per-user CUSUM
     shards the same way the state store always does — by key hash."""
-    from .offsets import _range_chunked_stream_dir
-
     src = read_event_stream(
-        spark,
-        _range_chunked_stream_dir(spark, sf_dir, n_chunks=4),
-        max_files_per_trigger=1,
+        spark, stage_stream_dir(spark, sf_dir), max_files_per_trigger=1
     )
     out = src.groupBy("event_type").applyInPandasWithState(
         _cusum_update,

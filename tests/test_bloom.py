@@ -92,8 +92,9 @@ def test_stream_dedup_corpus_planted_recall_laws(spark):
     """Per-record end-to-end hit/miss for the streaming corpus dedup
     (VERDICT r13 #4 — the streaming twin of the lexical family's
     measured recall): the ledger ids (event_id % 3 == 0) are planted
-    duplicates appearing in EVERY staged micro-batch chunk (chunk =
-    event_id % 4, so each chunk carries ids from every mod-3 class);
+    duplicates appearing in EVERY staged micro-batch chunk (chunk i =
+    the i-th of 4 event_id ranges, and every range carries ids from
+    every mod-3 class);
     with one chunk per trigger the op must, bloom-on AND bloom-off,
 
     - DROP every planted duplicate (drop recall exactly 1.0 — a bloom
@@ -108,7 +109,8 @@ def test_stream_dedup_corpus_planted_recall_laws(spark):
     fresh_ids = {
         r.event_id for r in ev.where(F.col("event_id") % 3 != 0).collect()
     }
-    per_chunk = [sum(1 for e in ledger_ids if e % 4 == i) for i in range(4)]
+    step = -(-(max(ledger_ids | fresh_ids) + 1) // 4)  # stage_stream_dir's ranges
+    per_chunk = [sum(1 for e in ledger_ids if e // step == i) for i in range(4)]
     assert all(n > 0 for n in per_chunk), per_chunk  # dups in every batch
 
     for bloom in (False, True):

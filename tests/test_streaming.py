@@ -219,21 +219,47 @@ def test_engine_starts_streams_only_through_run_stream():
 def test_rate_limit_batches_equal_staged_chunks(spark):
     """``maxFilesPerTrigger=1`` over the 4 staged chunk files runs one
     micro-batch per file, in discovery order: batch i holds exactly the
-    rows of chunk i (``event_id % 4 == i``)."""
+    rows of chunk i (the i-th event_id range, ``floor(event_id / step)
+    == i``)."""
     streamed = [
         (r["batch_id"], r["n_rows"])
         for r in QUERIES["stream_rate_limit"](spark, SF_DIR).collect()
     ]
+    e = _batch_events(spark)
+    step = -(-(e.agg(F.max("event_id")).first()[0] + 1) // 4)
     batch = [
         (r["chunk"], r["count"])
-        for r in _batch_events(spark)
-        .groupBy((F.col("event_id") % 4).alias("chunk"))
+        for r in e.groupBy(F.floor(F.col("event_id") / step).alias("chunk"))
         .count()
         .orderBy("chunk")
         .collect()
     ]
     assert len(batch) == 4
     assert streamed == batch
+
+
+def test_stage_stream_dir_range_layout(spark):
+    """The one staging layout: ``n`` files ``0000.parquet …`` whose chunk
+    i holds exactly the event ids in ``[i·step, (i+1)·step)`` with
+    ``step = ceil((max + 1) / n)``, mtimes strictly increasing (discovery
+    order == id order), and one cached dir per (sf_dir, n)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    ids = sorted(r["event_id"] for r in _batch_events(spark).collect())
+    for n in (3, 4):
+        stream_dir = stage_stream_dir(spark, SF_DIR, n)
+        names = sorted(os.listdir(stream_dir))
+        assert names == [f"{i:04d}.parquet" for i in range(n)]
+        step = -(-(ids[-1] + 1) // n)
+        for i, name in enumerate(names):
+            got = pq.read_table(os.path.join(stream_dir, name))["event_id"]
+            want = [e for e in ids if i * step <= e < (i + 1) * step]
+            assert sorted(got.to_pylist()) == want and want, (n, i)
+        mtimes = [os.stat(os.path.join(stream_dir, f)).st_mtime for f in names]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+        assert stage_stream_dir(spark, SF_DIR, n) == stream_dir
 
 
 def test_sink_foreachbatch_equals_batch(spark):
@@ -608,6 +634,33 @@ def test_offset_ledger_on_disk_contract(spark, tmp_path):
         assert not [f for f in files if f.endswith(".tmp")], f"temp file left in {d}"
 
 
+def test_ledger_readers_see_committed_batches_only(spark, tmp_path):
+    """``read_ledger`` and ``read_sink`` read the same committed set: a
+    ledger row published without its ``_SUCCESS`` (a kill between the
+    two) is invisible to both, and with nothing committed
+    ``read_ledger`` is an empty frame in ``LEDGER_SCHEMA``."""
+    import os
+
+    ledger = OffsetLedger(str(tmp_path / "committed"))
+    expected = spark.createDataFrame([], LEDGER_SCHEMA).schema
+    empty = ledger.read_ledger(spark)
+    assert empty.schema == expected and empty.count() == 0
+
+    e = _batch_events(spark)
+    ledger.process(e.where(F.col("event_id") % 2 == 0), 0)
+    ledger.process(e.where(F.col("event_id") % 2 == 1), 1)
+    os.remove(os.path.join(ledger.ledger_dir, "batch_id=1", "_SUCCESS"))
+    assert os.listdir(os.path.join(ledger.ledger_dir, "batch_id=1"))
+    assert [r["batch_id"] for r in ledger.read_ledger(spark).collect()] == [0]
+    sink_ids = sorted(r["event_id"] for r in ledger.read_sink(spark).collect())
+    assert sink_ids and all(i % 2 == 0 for i in sink_ids)
+    assert len(sink_ids) == e.where(F.col("event_id") % 2 == 0).count()
+
+    os.remove(os.path.join(ledger.ledger_dir, "batch_id=0", "_SUCCESS"))
+    empty = ledger.read_ledger(spark)
+    assert empty.schema == expected and empty.count() == 0
+
+
 def test_stream_static_join_equals_batch(spark):
     streamed = {
         (r["c_mktsegment"], r["event_type"]): r["n"]
@@ -976,7 +1029,7 @@ def test_offset_lag_monitor_matches_batch_twin(spark):
     row = QUERIES["stream_offset_lag_monitor"](spark, SF_DIR).collect()[0]
     e = load_table(spark, SF_DIR, "events")
     hi = e.agg(F.max("event_id")).first()[0]
-    step = -(-(hi + 1) // 4)  # same ceil-division as _range_chunked_stream_dir
+    step = -(-(hi + 1) // 4)  # same ceil-division as stage_stream_dir
     expect_committed = (
         e.where(F.col("event_id") < 2 * step).agg(F.max("event_id")).first()[0]
     )
@@ -1011,17 +1064,13 @@ def test_offset_rewind_full_rows_match_batch_suffix(spark):
     own internals so the sink stays reachable for the row-level diff."""
     from spark_streaming_kafka_offset_spark.common import scratch_path
     from spark_streaming_kafka_offset_spark.session import load_table
-    from spark_streaming_kafka_offset_spark.streaming.core import (
-        read_event_stream,
-    )
     from spark_streaming_kafka_offset_spark.streaming.offsets import (
         OffsetLedger,
-        _range_chunked_stream_dir,
         run_ledgered_stream,
     )
 
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
-    stream_dir = _range_chunked_stream_dir(spark, SF_DIR, n_chunks=3)
+    stream_dir = stage_stream_dir(spark, SF_DIR, n_chunks=3)
     full = run_ledgered_stream(
         spark,
         stream_dir,
@@ -1062,31 +1111,30 @@ def test_offset_rewind_full_rows_match_batch_suffix(spark):
 
 def test_offset_out_of_range_policies(spark):
     """VERDICT r7 #5: the retention-expiry resume — the one KafkaManager
-    behavior [K] that had no test.  Stage the range-chunked layout,
-    expire the earliest chunk (delete it, as broker retention would),
+    behavior [K] that had no test.  Copy the staged range chunks,
+    expire the earliest chunks (delete them, as broker retention would),
     then resume from an offset inside the expired range:
     ``clamp_earliest`` must restart at the retention floor and SAY SO
     (flag + ledger min_event_id + a 'gap' row in the contiguity audit);
     ``fail_fast`` must raise OffsetOutOfRangeError; an in-range offset
     passes through unchanged under either policy."""
+    import os
     import shutil
 
     import pytest
 
     from spark_streaming_kafka_offset_spark.common import scratch_path
-    from spark_streaming_kafka_offset_spark.streaming.core import (
-        read_event_stream,
-    )
     from spark_streaming_kafka_offset_spark.streaming.offsets import (
         OffsetLedger,
         OffsetOutOfRangeError,
-        _range_chunked_stream_dir,
         audit_ledger_contiguity,
         resolve_resume_offset,
         run_ledgered_stream,
     )
 
-    stream_dir = _range_chunked_stream_dir(spark, SF_DIR, n_chunks=4)
+    # A private copy: the staged dir is cached and shared with other tests.
+    stream_dir = scratch_path("oor_stream_")
+    shutil.copytree(stage_stream_dir(spark, SF_DIR), stream_dir, dirs_exist_ok=True)
     # Phase 1: a consumer commits offsets while all chunks are retained.
     full = run_ledgered_stream(
         spark,
@@ -1105,8 +1153,8 @@ def test_offset_out_of_range_policies(spark):
     # chunk 0 would leave 249 exactly abutting the floor at 250 — in
     # range by the requested+1 rule, which the pass-through case below
     # already covers).
-    shutil.rmtree(f"{stream_dir}/chunk=0")
-    shutil.rmtree(f"{stream_dir}/chunk=1")
+    os.remove(os.path.join(stream_dir, "0000.parquet"))
+    os.remove(os.path.join(stream_dir, "0001.parquet"))
     earliest_retained = (
         spark.read.parquet(stream_dir).agg(F.min("event_id")).first()[0]
     )
@@ -1324,6 +1372,24 @@ def test_offset_gap_audit_detects_lost_commit(spark):
     b2 = next(r for r in clean if r["batch_id"] == 2)
     assert gaps[0]["missing_rows"] == b2["until_event_id"] - b2["min_event_id"] + 1
     assert all(r["status"] in ("start", "contiguous") for r in damaged if r["status"] != "gap")
+
+
+def test_offset_ledger_offsets_are_resume_points(spark):
+    """Each committed ``until_event_id`` of the registered ledger query is
+    a resume point: batch i+1 starts at batch i's offset + 1, so the
+    contiguity audit reports only ``start`` then ``contiguous``, and the
+    batches cover the table exactly."""
+    from spark_streaming_kafka_offset_spark.streaming.offsets import (
+        audit_ledger_contiguity,
+    )
+
+    ledger = QUERIES["stream_offset_ledger"](spark, SF_DIR)
+    audit = audit_ledger_contiguity(ledger, "registered").collect()
+    assert [r["status"] for r in audit] == ["start"] + ["contiguous"] * 3
+    e = _batch_events(spark)
+    assert audit[0]["min_event_id"] == e.agg(F.min("event_id")).first()[0]
+    assert audit[-1]["until_event_id"] == e.agg(F.max("event_id")).first()[0]
+    assert ledger.agg(F.sum("n_rows")).first()[0] == e.count()
 
 
 def test_backfill_stitch_has_no_seam(spark):

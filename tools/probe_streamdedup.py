@@ -54,7 +54,8 @@ def main() -> int:
     ledger = ev.where(F.col("event_id") % 3 == 0)
     ledger_ids = {r.event_id for r in ledger.collect()}
     fresh_ids = {r.event_id for r in ev.where(F.col("event_id") % 3 != 0).collect()}
-    per_chunk = [sum(1 for e in ledger_ids if e % 4 == i) for i in range(4)]
+    step = -(-(max(ledger_ids | fresh_ids) + 1) // 4)  # stage_stream_dir's ranges
+    per_chunk = [sum(1 for e in ledger_ids if e // step == i) for i in range(4)]
 
     report: dict = {
         "n_events": len(ledger_ids) + len(fresh_ids),
