@@ -21,6 +21,11 @@ path: it owns the ``Trigger.AvailableNow`` trigger, the checkpoint, the
 state-store sizing and the wait for completion.  Queries run over a
 deterministic chunked copy of ``events`` and return the materialized
 result, so they are driver-collectable like any batch query.
+
+Every batch-keyed ``foreachBatch`` sink writes ``batch_id=N``
+directories and treats one as committed exactly when its ``_SUCCESS``
+exists (:func:`committed_batch_ids`); versioned stores fold through
+:func:`fold_batch`, which skips a replayed batch that is committed.
 """
 
 from __future__ import annotations
@@ -277,6 +282,54 @@ def run_stream(
             spark.conf.set(key, prev)
     q.awaitTermination()
     return q
+
+
+def committed_batch_ids(parent: str) -> list[int]:
+    """The ids N whose ``parent/batch_id=N/_SUCCESS`` exists, ascending:
+    the commit rule of every batch-keyed sink.  Spark's job commit
+    writes ``_SUCCESS`` after the part files, so a Spark-written
+    directory is committed exactly when its ``_SUCCESS`` exists, and a
+    torn one (a crash mid-write) is invisible to readers that list
+    through here."""
+    if not os.path.isdir(parent):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(parent)
+        if os.path.exists(os.path.join(parent, d, "_SUCCESS"))
+    )
+
+
+def latest_batch(
+    spark: SparkSession, store: str, below: int | None = None
+) -> DataFrame | None:
+    """The latest committed version of ``store`` (below batch id
+    ``below``, if given), or ``None`` before the first commit."""
+    ids = [b for b in committed_batch_ids(store) if below is None or b < below]
+    if not ids:
+        return None
+    return spark.read.parquet(os.path.join(store, f"batch_id={ids[-1]}"))
+
+
+def fold_batch(
+    spark: SparkSession,
+    store: str,
+    batch_id: int,
+    step: Callable[[DataFrame | None], DataFrame],
+) -> None:
+    """One ``foreachBatch`` turn of a versioned store: write ``step(prev)``
+    to ``store/batch_id=N`` (mode=overwrite), where ``prev`` is the latest
+    committed version below N (``None`` before the first).  A batch id
+    already committed returns at once, without a Spark job: the WAL's
+    ``offsets/N`` pins a replayed batch to the same input, so its
+    committed version is already the answer.  Only an uncommitted (torn)
+    version is ever overwritten, and none is ever read."""
+    if batch_id in committed_batch_ids(store):
+        return  # committed: a replay writes nothing
+    prev = latest_batch(spark, store, below=batch_id)
+    step(prev).write.mode("overwrite").parquet(
+        os.path.join(store, f"batch_id={batch_id}")
+    )
 
 
 def run_to_completion(
@@ -734,11 +787,12 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's own before-image — the store is the source of truth once
     the stream is live).
 
-    Exactly-once: the store is versioned by batch_id (v{id+1} derives
-    from v{id}), so a replayed batch rebuilds its own version instead
-    of double-closing rows — the offset-ledger idempotence recipe.  At
-    scale the store is a MERGE INTO target behind ``sink_txn_log``'s
-    REPLACE commit; history rows are only ever produced by projection.
+    Exactly-once: :func:`fold_batch` keeps the store as one committed
+    version per batch id (``batch_id=N`` holds the history after batch
+    N; before batch 0 it is the lazy ``customer`` seed), so a replayed
+    batch is skipped instead of double-closing rows.  At scale the
+    store is a MERGE INTO target behind ``sink_txn_log``'s REPLACE
+    commit; history rows are only ever produced by projection.
 
     The equivalence test (tests/test_streaming.py) asserts the final
     history is row-identical to the one-shot batch ``merge_scd2`` —
@@ -768,28 +822,22 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(cdc_dir)
     store = scratch_path("scd2_store_")
-    c.select(
+    seed = c.select(
         "c_custkey",
         "c_mktsegment",
         "c_acctbal",
         origin.alias("valid_from"),
         F.lit(None).cast("date").alias("valid_to"),
         F.lit(True).alias("is_current"),
-    ).write.parquet(f"{store}/v0")
-
-    def _latest(before: int | None = None) -> str:
-        vs = sorted(
-            int(d[1:]) for d in os.listdir(store) if d.startswith("v")
-        )
-        if before is not None:
-            vs = [v for v in vs if v < before]
-        return f"{store}/v{vs[-1]}"
+    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hist = spark.read.parquet(_latest(before=batch_id + 1))
-        scd2_merge_batch(hist, batch_df, eff).write.mode(
-            "overwrite"
-        ).parquet(f"{store}/v{batch_id + 1}")
+        fold_batch(
+            spark, store, batch_id,
+            lambda prev: scd2_merge_batch(
+                seed if prev is None else prev, batch_df, eff
+            ),
+        )
 
     src = (
         spark.readStream.schema("c_custkey long, new_seg string, new_bal double")
@@ -797,7 +845,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(cdc_dir)
     )
     run_stream(src, apply_batch, checkpoint=scratch_path("ckpt_"))
-    return spark.read.parquet(_latest()).orderBy("c_custkey", "valid_from")
+    return latest_batch(spark, store).orderBy("c_custkey", "valid_from")
 
 
 @register("stream_rate_limit")
@@ -830,11 +878,12 @@ def stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGEs them into a versioned hourly store; the daily level reads the
     maintained hourly table, never raw events.
 
-    Exactly-once without transactions: store version == batch_id, so a
-    replayed batch overwrites its own version instead of double-counting
-    (same idempotence recipe as the offset ledger, offsets.py).  At scale
-    the store is a Delta/Iceberg MERGE INTO target; the versioned-dir
-    parquet store keeps identical semantics with plain files.
+    Exactly-once without transactions: :func:`fold_batch` writes one
+    committed version per batch id and skips a replayed batch whose
+    version is committed (``_SUCCESS``, the offset ledger's rule), so
+    nothing is double-counted.  At scale the store is a Delta/Iceberg
+    MERGE INTO target; the versioned-dir parquet store keeps identical
+    semantics with plain files.
 
     The equivalence test (tests/test_streaming.py) asserts the final
     daily frame is byte-identical to the one-shot batch rollup.
@@ -844,18 +893,13 @@ def stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = scratch_path("sskos_rollup_store_")
 
-    def _versions() -> list[str]:
-        return sorted(
-            d for d in os.listdir(store) if d.startswith("v")
-        )
-
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         # Aggregate INSIDE foreachBatch: a streaming-side aggregation in
         # update mode would emit *cumulative* state rows, and merging
         # those into the store double-counts.  Here batch_df is raw batch
         # events, so this aggregate is a true per-batch delta.
         k = F.get_json_object("props", "$.k").cast("int")
-        batch_df = batch_df.groupBy(
+        delta = batch_df.groupBy(
             F.date_trunc("hour", "ts").alias("hour"), "event_type"
         ).agg(
             F.count("*").alias("n"),
@@ -863,12 +907,10 @@ def stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(k).alias("min_k"),
             F.max(k).alias("max_k"),
         )
-        prior = [v for v in _versions() if int(v[1:]) < batch_id]
-        merged = batch_df
-        if prior:
-            existing = spark.read.parquet(os.path.join(store, prior[-1]))
-            merged = (
-                existing.unionByName(batch_df)
+        fold_batch(
+            spark, store, batch_id,
+            lambda prev: delta if prev is None else (
+                prev.unionByName(delta)
                 .groupBy("hour", "event_type")
                 .agg(
                     F.sum("n").alias("n"),
@@ -876,13 +918,11 @@ def stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.min("min_k").alias("min_k"),
                     F.max("max_k").alias("max_k"),
                 )
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(store, f"v{batch_id:06d}")
+            ),
         )
 
     run_stream(src, merge, checkpoint=scratch_path("ckpt_"))
-    hourly = spark.read.parquet(os.path.join(store, _versions()[-1]))
+    hourly = latest_batch(spark, store)
     return (
         hourly.groupBy(
             F.date_trunc("day", "hour").cast("date").alias("day"), "event_type"
@@ -1204,10 +1244,10 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     `MERGE` consumption pattern (op = delete for 'error' events, else
     upsert of the user's latest value; ordering key = (ts, event_id)).
 
-    Exactly-once via the versioned-store recipe (cf.
-    `stream_rollup_upsert`): each batch merges prior state with its own
-    ops by `max_by` over the ordering key, writes store version ==
-    batch_id, so a replayed batch overwrites itself.  Deletes are kept
+    Exactly-once via :func:`fold_batch` (cf. `stream_rollup_upsert`):
+    each batch merges the prior committed state with its own ops by
+    `max_by` over the ordering key into its own version, and a replayed
+    batch whose version is committed is skipped.  Deletes are kept
     as TOMBSTONES inside the store (filtered only at read time): a
     delete must keep suppressing earlier upserts on replay/compaction,
     and a later upsert must beat the tombstone by ordering key — the
@@ -1224,9 +1264,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = scratch_path("sskos_cdc_store_")
 
-    def _versions() -> list[str]:
-        return sorted(d for d in os.listdir(store) if d.startswith("v"))
-
     def apply_cdc(batch_df: DataFrame, batch_id: int) -> None:
         ops = batch_df.select(
             "user_id",
@@ -1241,25 +1278,21 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct("ts", "event_id"),
             ).alias("st")
         )
-        prior = [v for v in _versions() if int(v[1:]) < batch_id]
-        merged = latest
-        if prior:
-            existing = spark.read.parquet(os.path.join(store, prior[-1]))
-            merged = (
-                existing.unionByName(latest)
+        fold_batch(
+            spark, store, batch_id,
+            lambda prev: latest if prev is None else (
+                prev.unionByName(latest)
                 .groupBy("user_id")
                 .agg(
                     F.max_by(
                         "st", F.struct(F.col("st.ts"), F.col("st.event_id"))
                     ).alias("st")
                 )
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(store, f"v{batch_id:06d}")
+            ),
         )
 
     run_stream(src, apply_cdc, checkpoint=scratch_path("ckpt_"))
-    state = spark.read.parquet(os.path.join(store, _versions()[-1]))
+    state = latest_batch(spark, store)
     return (
         state.where(~F.col("st.is_delete"))
         .select(
@@ -1401,6 +1434,42 @@ def dlq_reason(df: DataFrame) -> DataFrame:
     )
 
 
+def dlq_route_batch(
+    batch_df: DataFrame, batch_id: int, valid_dir: str, dlq_dir: str
+) -> None:
+    """Route one checked batch (``dlq_reason`` column) to
+    ``valid_dir/batch_id=N`` and then ``dlq_dir/batch_id=N``; the DLQ
+    write's ``_SUCCESS`` commits the batch, and a committed batch id
+    returns at once."""
+    if batch_id in committed_batch_ids(dlq_dir):
+        return  # committed: a replay writes nothing
+    batch_df.persist()
+    try:
+        batch_df.where(F.col("dlq_reason").isNull()).drop(
+            "dlq_reason"
+        ).write.mode("overwrite").parquet(
+            os.path.join(valid_dir, f"batch_id={batch_id}")
+        )
+        batch_df.where(F.col("dlq_reason").isNotNull()).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(dlq_dir, f"batch_id={batch_id}"))
+    finally:
+        batch_df.unpersist()
+
+
+def read_dlq_routes(spark: SparkSession, valid_dir: str, dlq_dir: str) -> DataFrame:
+    """(route, reason) per routed row of the committed batches of both
+    sinks (:func:`dlq_route_batch`)."""
+    ids = committed_batch_ids(dlq_dir)
+    valid = spark.read.parquet(
+        *(os.path.join(valid_dir, f"batch_id={b}") for b in ids)
+    ).select(F.lit("valid").alias("route"), F.lit("ok").alias("reason"))
+    dead = spark.read.parquet(
+        *(os.path.join(dlq_dir, f"batch_id={b}") for b in ids)
+    ).select(F.lit("dlq").alias("route"), F.col("dlq_reason").alias("reason"))
+    return valid.unionAll(dead)
+
+
 @register("stream_dlq_split")
 def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter-queue routing — the ingestion pattern every production
@@ -1411,10 +1480,11 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical reason foreachBatch exists (a writeStream has exactly one
     sink; the batch hook can have N).
 
-    Exactly-once: each sink writes ``batch=<id>`` directories with
-    mode=overwrite, so a replayed batch overwrites its own output
-    instead of appending duplicates — the same store-version==batch_id
-    idempotence recipe as `stream_rollup_upsert` and the offset ledger.
+    Exactly-once: :func:`dlq_route_batch` writes ``batch_id=N`` into both
+    sinks, the DLQ write last, and that write's ``_SUCCESS`` commits the
+    batch (:func:`committed_batch_ids`): a replay of a committed batch
+    writes nothing, a torn one is overwritten, and
+    :func:`read_dlq_routes` reads committed batches only.
     At 100 TB both sinks are transactional tables (`sink_txn_log`'s
     protocol); the routing plan itself is scan-side codegen — one
     `get_json_object` + comparisons, no shuffle before the writes.
@@ -1430,28 +1500,13 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked = dlq_reason(dlq_mangle(src))
     valid_dir = scratch_path("sskos_dlq_valid_")
     dlq_dir = scratch_path("sskos_dlq_dead_")
-
-    def route(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            batch_df.where(F.col("dlq_reason").isNull()).drop(
-                "dlq_reason"
-            ).write.mode("overwrite").parquet(f"{valid_dir}/batch={batch_id}")
-            batch_df.where(F.col("dlq_reason").isNotNull()).write.mode(
-                "overwrite"
-            ).parquet(f"{dlq_dir}/batch={batch_id}")
-        finally:
-            batch_df.unpersist()
-
-    run_stream(checked, route, checkpoint=scratch_path("ckpt_dlq_"))
-    valid = spark.read.parquet(valid_dir).select(
-        F.lit("valid").alias("route"), F.lit("ok").alias("reason")
-    )
-    dead = spark.read.parquet(dlq_dir).select(
-        F.lit("dlq").alias("route"), F.col("dlq_reason").alias("reason")
+    run_stream(
+        checked,
+        lambda df, batch_id: dlq_route_batch(df, batch_id, valid_dir, dlq_dir),
+        checkpoint=scratch_path("ckpt_dlq_"),
     )
     return (
-        valid.unionAll(dead)
+        read_dlq_routes(spark, valid_dir, dlq_dir)
         .groupBy("route", "reason")
         .agg(F.count("*").cast("long").alias("n_rows"))
         .orderBy("route", "reason")
@@ -1523,10 +1578,10 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived cell coordinates to batch `agg_countmin_heavyhitters`,
     operators/scale.py), and ``foreachBatch`` merges it into a
     versioned cell store by pure cell-wise addition — the CMS semigroup
-    law.  Store version == batch_id gives replay idempotence (the
-    offset-ledger recipe), and because cells add, the final store is
-    EXACTLY the batch CMS of the full corpus — pinned byte-for-byte by
-    tests/test_streaming.py::test_stream_cms_equals_batch_cms.
+    law.  :func:`fold_batch` gives replay idempotence (a batch whose
+    version is committed is skipped), and because cells add, the final
+    store is EXACTLY the batch CMS of the full corpus — pinned
+    byte-for-byte by tests/test_streaming.py::test_stream_cms_equals_batch_cms.
 
     At 100 TB this is the live heavy-hitter monitor: 256 int64 cells of
     state per partition-merge regardless of corpus size, and the
@@ -1536,9 +1591,6 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, stage_stream_dir(spark, sf_dir), max_files_per_trigger=1
     )
     store = scratch_path("sskos_cms_store_")
-
-    def _versions() -> list[str]:
-        return sorted(d for d in os.listdir(store) if d.startswith("v"))
 
     def coord_expr():
         return F.pmod(
@@ -1569,21 +1621,17 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("i", coord_expr().alias("cell"))
             .agg(F.count(F.lit(1)).alias("total"))
         )
-        prior = [v for v in _versions() if int(v[1:]) < batch_id]
-        merged = part
-        if prior:
-            existing = spark.read.parquet(os.path.join(store, prior[-1]))
-            merged = (
-                existing.unionByName(part)
+        fold_batch(
+            spark, store, batch_id,
+            lambda prev: part if prev is None else (
+                prev.unionByName(part)
                 .groupBy("i", "cell")
                 .agg(F.sum("total").alias("total"))
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(store, f"v{batch_id:06d}")
+            ),
         )
 
     run_stream(src, merge, checkpoint=scratch_path("ckpt_"))
-    cells = spark.read.parquet(os.path.join(store, _versions()[-1]))
+    cells = latest_batch(spark, store)
     return cells.select(
         F.col("i").cast("long").alias("i"),
         F.col("cell").cast("long").alias("cell"),

@@ -18,11 +18,13 @@ Spark-first restatement, with the engine doing the hard half:
   published (``ledger/batch_id=N/_SUCCESS``) is skipped on replay — the
   rule of Spark's own ``FileStreamSink`` and its ``_spark_metadata``
   log, safe because the WAL's ``offsets/N`` pins a replayed batch to the
-  same files.  Only an uncommitted batch is ever overwritten, and
-  ``read_sink`` reads committed batches only, so no reader sees a
-  missing, torn or duplicated batch.  The sink write is the batch's
-  ONLY Spark job: the ledger's count/min/max ride on it as a
-  ``pyspark.sql.Observation``.
+  same files.  The rule is ``core.committed_batch_ids``, which every
+  batch-keyed sink of the engine shares (``core.fold_batch``'s
+  versioned stores, the DLQ router).  Only an uncommitted batch is ever
+  overwritten, and ``read_sink`` reads committed batches only, so no
+  reader sees a missing, torn or duplicated batch.  The sink write is
+  the batch's ONLY Spark job: the ledger's count/min/max ride on it as
+  a ``pyspark.sql.Observation``.
 * **Audit**: a parquet ledger row per (group, source, batch) mirroring
   the reference's ZK node content — queryable lineage of what was
   committed when, which ZooKeeper never gave you.  The driver writes
@@ -49,7 +51,13 @@ from pyspark.sql.window import Window
 
 from ..plans.registry import register
 from ..session import load_table
-from .core import EVENT_SCHEMA, read_event_stream, run_stream, stage_stream_dir
+from .core import (
+    EVENT_SCHEMA,
+    committed_batch_ids,
+    read_event_stream,
+    run_stream,
+    stage_stream_dir,
+)
 
 from ..common import scratch_path
 
@@ -79,7 +87,9 @@ class OffsetLedger:
     after that write returns does the driver write the audit row with
     pyarrow to a hidden temp file in ``ledger_dir/batch_id=N/``, publish
     it with ``os.replace`` onto ``part-00000.parquet`` and touch
-    ``_SUCCESS`` last.  That ``_SUCCESS`` is the batch's commit record:
+    ``_SUCCESS`` last.  That ``_SUCCESS`` is the batch's commit record,
+    read through ``core.committed_batch_ids``, the commit rule of every
+    batch-keyed sink:
 
     * ``process`` returns at once for a batch id already committed, so a
       replay after the ledger commit (crash before the WAL's
@@ -103,13 +113,7 @@ class OffsetLedger:
 
     def committed_batch_ids(self) -> list[int]:
         """Batch ids whose ledger row is published, ascending."""
-        if not os.path.isdir(self.ledger_dir):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.ledger_dir)
-            if os.path.exists(os.path.join(self.ledger_dir, d, "_SUCCESS"))
-        )
+        return committed_batch_ids(self.ledger_dir)
 
     def process(self, df: DataFrame, batch_id: int) -> None:
         import pyarrow as pa
@@ -148,7 +152,12 @@ class OffsetLedger:
         return spark.read.schema(LEDGER_SCHEMA).parquet(*paths)
 
     def read_sink(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(*self._committed_dirs(self.sink_dir))
+        """The committed sink rows; empty, with ``EVENT_SCHEMA``, before
+        the first commit."""
+        paths = self._committed_dirs(self.sink_dir)
+        if not paths:
+            return spark.createDataFrame([], EVENT_SCHEMA)
+        return spark.read.parquet(*paths)
 
 
 def run_ledgered_stream(

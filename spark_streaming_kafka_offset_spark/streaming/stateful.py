@@ -2,18 +2,14 @@
 ``updateStateByKey``/``mapWithState`` successor [K] (SURVEY.md; mirror
 empty §0).
 
-Two implementations of the same running-per-user-stats contract:
+:func:`running_user_stats` runs the running-per-user-stats contract
+on ``applyInPandasWithState`` (Arrow-based, no protobuf dependency).
+Spark 4's ``transformWithStateInPandas`` needs ``google.protobuf`` in
+its driver-side planning worker, which this runtime lacks, so the
+engine carries no port of it; Spark's docs are the reference if
+protobuf ever lands.
 
-* :func:`running_user_stats_tws` — Spark 4's
-  ``transformWithStateInPandas`` (typed named state, timers, TTL).  Its
-  driver-side planning worker imports ``google.protobuf``, which is
-  **broken in this environment** (verified: ``ImportError: cannot import
-  name 'descriptor'`` from the TWS driver worker; no pip available), so
-  this path is written, gated on a protobuf probe, and NOT the default.
-* :func:`running_user_stats` — ``applyInPandasWithState`` (Arrow-based,
-  no protobuf dependency): the registered, tested path.
-
-Both keep O(1) state per key; the state store is executor-local and
+It keeps O(1) state per key; the state store is executor-local and
 checkpointed, so keyspace scales with the cluster, not the driver heap.
 Production deployments add a timeout/TTL so state is evicted — the
 100 TB rule that every stateful operator needs an eviction story.
@@ -73,65 +69,6 @@ def running_user_stats(events: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs a working google.protobuf in the
-    TWS driver worker; probe it the same way that worker imports it."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """The forward API (Spark 4 ``transformWithStateInPandas``): same
-    semantics as :func:`running_user_stats` plus named states/timers/TTL.
-    Raises a clear error where protobuf is unusable instead of crashing
-    the streaming query at plan time."""
-    if not _tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not importable in this environment; use running_user_stats() "
-            "(applyInPandasWithState) instead."
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningUserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._state.get()
-            n, total, purchases = prev if prev is not None else (0, 0.0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                purchases += int((pdf["event_type"] == "purchase").sum())
-            self._state.update((n, total, purchases))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "n_purchases": [purchases],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningUserStats(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -14,6 +14,10 @@ from pyspark.sql import functions as F
 
 from spark_streaming_kafka_offset_spark.session import load_table
 from spark_streaming_kafka_offset_spark.streaming.core import (
+    EVENT_SCHEMA,
+    committed_batch_ids,
+    fold_batch,
+    latest_batch,
     read_event_stream,
     stage_stream_dir,
 )
@@ -214,6 +218,63 @@ def test_engine_starts_streams_only_through_run_stream():
         rel = f.relative_to(root).as_posix()
         walk(ast.parse(f.read_text(), rel), rel, None)
     assert hits == [("streaming/core.py", "run_stream")]
+
+
+def test_batch_keyed_sinks_share_one_commit_rule():
+    """One commit rule: outside docstrings the package names ``_SUCCESS``
+    only in ``streaming.core.committed_batch_ids`` and in
+    ``OffsetLedger.process`` (its stat and its touch), and no string
+    under ``streaming/`` names a ``v{…}`` or ``batch=…`` directory, so
+    every batch-keyed sink directory is ``batch_id=N``."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import spark_streaming_kafka_offset_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    success, dir_names = [], []
+
+    def walk(node, rel, func, docs):
+        for child in ast.iter_child_nodes(node):
+            if id(child) in docs:
+                continue
+            inner = func
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if isinstance(child, ast.JoinedStr):  # f-string: {} per field
+                text = "".join(
+                    v.value if isinstance(v, ast.Constant) else "{}"
+                    for v in child.values
+                )
+            elif isinstance(child, ast.Constant) and isinstance(child.value, str):
+                text = child.value
+            else:
+                walk(child, rel, inner, docs)
+                continue
+            if "_SUCCESS" in text:
+                success.append((rel, inner))
+            if rel.startswith("streaming/") and re.search(r"(^|/)v\{|batch=", text):
+                dir_names.append((rel, inner, text))
+
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        tree = ast.parse(f.read_text(), rel)
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(
+                n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+            )
+            and ast.get_docstring(n) is not None
+        }
+        walk(tree, rel, None, docs)
+    assert success == [
+        ("streaming/core.py", "committed_batch_ids"),
+        ("streaming/offsets.py", "process"),
+        ("streaming/offsets.py", "process"),
+    ]
+    assert dir_names == []
 
 
 def test_rate_limit_batches_equal_staged_chunks(spark):
@@ -638,13 +699,17 @@ def test_ledger_readers_see_committed_batches_only(spark, tmp_path):
     """``read_ledger`` and ``read_sink`` read the same committed set: a
     ledger row published without its ``_SUCCESS`` (a kill between the
     two) is invisible to both, and with nothing committed
-    ``read_ledger`` is an empty frame in ``LEDGER_SCHEMA``."""
+    ``read_ledger`` is an empty frame in ``LEDGER_SCHEMA`` and
+    ``read_sink`` an empty frame in ``EVENT_SCHEMA``."""
     import os
 
     ledger = OffsetLedger(str(tmp_path / "committed"))
     expected = spark.createDataFrame([], LEDGER_SCHEMA).schema
+    expected_sink = spark.createDataFrame([], EVENT_SCHEMA).schema
     empty = ledger.read_ledger(spark)
     assert empty.schema == expected and empty.count() == 0
+    empty_sink = ledger.read_sink(spark)
+    assert empty_sink.schema == expected_sink and empty_sink.count() == 0
 
     e = _batch_events(spark)
     ledger.process(e.where(F.col("event_id") % 2 == 0), 0)
@@ -659,6 +724,8 @@ def test_ledger_readers_see_committed_batches_only(spark, tmp_path):
     os.remove(os.path.join(ledger.ledger_dir, "batch_id=0", "_SUCCESS"))
     empty = ledger.read_ledger(spark)
     assert empty.schema == expected and empty.count() == 0
+    empty_sink = ledger.read_sink(spark)
+    assert empty_sink.schema == expected_sink and empty_sink.count() == 0
 
 
 def test_stream_static_join_equals_batch(spark):
@@ -1677,6 +1744,18 @@ def test_stream_cms_equals_batch_cms(spark):
     assert sum(r.total for r in streamed) == 4 * e.count()
 
 
+def _inodes(root):
+    """path -> inode of every file under ``root``.  A Spark rewrite of a
+    directory changes both: part files are named per write job."""
+    import os
+
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_ino
+        for d, _, names in os.walk(root)
+        for f in names
+    }
+
+
 def test_ledger_crash_replay_commits_once_orphans_invisible(spark, tmp_path):
     """The ledger row is the sink's commit record, across the worst-case
     crash (part of a batch on disk, its ledger row not yet published):
@@ -1723,17 +1802,199 @@ def test_ledger_crash_replay_commits_once_orphans_invisible(spark, tmp_path):
 
     # 3. A fresh checkpoint over the same root replays every batch id;
     # each is already committed, so nothing is rewritten.
-    def files():
-        return {
-            os.path.join(d, f): os.stat(os.path.join(d, f)).st_ino
-            for d, _, names in os.walk(root)
-            for f in names
-        }
-
-    before = files()
+    before = _inodes(root)
     run_ledgered_stream(spark, stream_dir, root, str(tmp_path / "ckpt2"))
     assert ledger.read_ledger(spark).count() == 4
-    assert files() == before, "a committed batch was rewritten"
+    assert _inodes(root) == before, "a committed batch was rewritten"
+
+
+def test_fold_batch_reads_and_skips_by_commit_record(spark, tmp_path):
+    """``fold_batch``'s rule: ``prev`` is the latest version whose
+    ``_SUCCESS`` exists, so a torn ``batch_id=1`` (part files, no
+    ``_SUCCESS``) is never folded into batch 2 and is overwritten when
+    batch 1 runs; a committed batch id returns without calling ``step``,
+    rewrites no file and runs no Spark job."""
+    import os
+    import time
+
+    store = str(tmp_path / "store")
+    seen = {}
+
+    def step_for(batch_id):
+        def step(prev):
+            seen[batch_id] = None if prev is None else sorted(
+                r["b"] for r in prev.collect()
+            )
+            delta = spark.createDataFrame([(batch_id,)], "b long")
+            return delta if prev is None else prev.unionByName(delta)
+
+        return step
+
+    fold_batch(spark, store, 0, step_for(0))
+    torn = os.path.join(store, "batch_id=1")
+    spark.createDataFrame([(99,)], "b long").write.parquet(torn)
+    os.remove(os.path.join(torn, "_SUCCESS"))
+    assert committed_batch_ids(store) == [0]
+    fold_batch(spark, store, 2, step_for(2))
+    assert seen == {0: None, 2: [0]}, "a torn version was read as prev"
+    fold_batch(spark, store, 1, step_for(1))
+    assert seen[1] == [0]
+    assert committed_batch_ids(store) == [0, 1, 2]
+    assert sorted(r["b"] for r in spark.read.parquet(torn).collect()) == [0, 1]
+    assert sorted(r["b"] for r in latest_batch(spark, store).collect()) == [0, 2]
+
+    def boom(prev):
+        raise AssertionError("step called for a committed batch")
+
+    before = _inodes(store)
+    sc = spark.sparkContext
+    sc.setJobGroup("fold_batch_replay", "replays of committed batch ids")
+    try:
+        for b in (0, 1, 2):
+            fold_batch(spark, store, b, boom)
+        sc.setJobGroup("fold_batch_control", "one job after the replays")
+        spark.range(3).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _inodes(store) == before, "a committed version was rewritten"
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30  # the status store follows the event bus
+    while not tracker.getJobIdsForGroup("fold_batch_control"):
+        assert time.monotonic() < deadline
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("fold_batch_replay") == []
+
+
+def test_versioned_store_crash_replay_skips_committed_batch(spark, tmp_path):
+    """Crash cell for the versioned stores (ROADMAP item 5): a
+    rollup-shaped ``fold_batch`` stream dies after batch 1's version is
+    committed and before its WAL commit.  The restart on the same
+    checkpoint replays batch 1, which ``fold_batch`` skips (no file of
+    versions 0 and 1 is rewritten), and the final version equals the
+    batch aggregate."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from spark_streaming_kafka_offset_spark.streaming.core import run_stream
+
+    src = read_event_stream(
+        spark, stage_stream_dir(spark, SF_DIR), max_files_per_trigger=1
+    )
+    store = str(tmp_path / "store")
+    ckpt = str(tmp_path / "ckpt")
+    crashes = []
+
+    def sink(batch_df, batch_id):
+        delta = batch_df.groupBy("event_type").agg(
+            F.count("*").alias("n"), F.sum("event_id").alias("s")
+        )
+        fold_batch(
+            spark, store, batch_id,
+            lambda prev: delta if prev is None else (
+                prev.unionByName(delta)
+                .groupBy("event_type")
+                .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
+            ),
+        )
+        if batch_id == 1 and not crashes:
+            crashes.append(batch_id)
+            raise RuntimeError("injected crash after the store commit")
+
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run_stream(src, sink, checkpoint=ckpt)
+    assert committed_batch_ids(store) == [0, 1]
+    before = _inodes(store)
+    run_stream(src, sink, checkpoint=ckpt)
+    after = _inodes(store)
+    assert crashes == [1] and committed_batch_ids(store) == [0, 1, 2, 3]
+    assert {p: after.get(p) for p in before} == before, "batch 1 was rewritten"
+    want = sorted(
+        map(
+            tuple,
+            _batch_events(spark)
+            .groupBy("event_type")
+            .agg(F.count("*").alias("n"), F.sum("event_id").alias("s"))
+            .collect(),
+        )
+    )
+    assert sorted(map(tuple, latest_batch(spark, store).collect())) == want
+
+
+def test_dlq_torn_batch_invisible_then_rewritten_once(spark, tmp_path):
+    """DLQ router commit rule: batch 1's valid write commits, its DLQ
+    write dies before its job commit (part files, no ``_SUCCESS``) and
+    the stream fails.  Both readers hide batch 1, valid rows included.
+    The restart rewrites batch 1 once, leaves committed batch 0 alone,
+    and the routes equal the batch formulation; a fresh checkpoint over
+    the same sinks rewrites nothing."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from spark_streaming_kafka_offset_spark.streaming.core import (
+        dlq_mangle,
+        dlq_reason,
+        dlq_route_batch,
+        read_dlq_routes,
+        run_stream,
+    )
+
+    stream_dir = stage_stream_dir(spark, SF_DIR)
+    checked = dlq_reason(
+        dlq_mangle(read_event_stream(spark, stream_dir, max_files_per_trigger=1))
+    )
+    valid_dir, dlq_dir = str(tmp_path / "valid"), str(tmp_path / "dlq")
+    crashes = []
+
+    def sink(batch_df, batch_id):
+        dlq_route_batch(batch_df, batch_id, valid_dir, dlq_dir)
+        if batch_id == 1 and not crashes:
+            crashes.append(batch_id)
+            os.remove(os.path.join(dlq_dir, "batch_id=1", "_SUCCESS"))
+            raise RuntimeError("injected crash in the DLQ write")
+
+    def routes():
+        return sorted(
+            map(tuple, read_dlq_routes(spark, valid_dir, dlq_dir)
+                .groupBy("route", "reason").count().collect())
+        )
+
+    def twin(events):
+        return sorted(
+            map(tuple, dlq_reason(dlq_mangle(events))
+                .select(
+                    F.when(F.col("dlq_reason").isNull(), "valid")
+                    .otherwise("dlq").alias("route"),
+                    F.coalesce("dlq_reason", F.lit("ok")).alias("reason"),
+                )
+                .groupBy("route", "reason").count().collect())
+        )
+
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run_stream(checked, sink, checkpoint=str(tmp_path / "ckpt"))
+    assert committed_batch_ids(valid_dir) == [0, 1]
+    assert committed_batch_ids(dlq_dir) == [0]
+    chunk0 = os.path.join(stream_dir, sorted(os.listdir(stream_dir))[0])
+    assert routes() == twin(spark.read.parquet(chunk0)), "a torn batch is visible"
+
+    def sinks():
+        return _inodes(valid_dir) | _inodes(dlq_dir)
+
+    def parts(batch_id):  # Spark names part files per write job
+        tag = f"batch_id={batch_id}"
+        return {p for p in sinks() if tag in p and p.endswith(".parquet")}
+
+    batch0, torn = _inodes(os.path.join(valid_dir, "batch_id=0")), parts(1)
+    run_stream(checked, sink, checkpoint=str(tmp_path / "ckpt"))
+    assert committed_batch_ids(dlq_dir) == [0, 1, 2, 3]
+    assert _inodes(os.path.join(valid_dir, "batch_id=0")) == batch0
+    assert parts(1) and not parts(1) & torn, "batch 1 was not rewritten"
+    assert routes() == twin(_batch_events(spark)), "lost or duplicated rows"
+
+    before = sinks()
+    run_stream(checked, sink, checkpoint=str(tmp_path / "ckpt2"))
+    assert sinks() == before, "a committed batch was rewritten"
 
 
 def test_stream_txn_exactly_once_audit(spark):
