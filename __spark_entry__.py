@@ -27,9 +27,10 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Ordered by ``DRIVER_PRIORITY``: the correctness harness evaluates the
-    first 50 registered queries, so every oracle-backed SURVEY §2 row is
-    placed inside that window (registry.py documents the policy).
+    Ordered by ``ordered_queries()``: oracle keys stalest-evidence first,
+    derived from the ``CORRECTNESS_r*.json`` ledgers.  The correctness
+    harness evaluates the first 50 returned queries (registry.py
+    documents the policy).
     """
     return engine.ordered_queries()
 

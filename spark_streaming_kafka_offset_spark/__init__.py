@@ -19,11 +19,10 @@ from __future__ import annotations
 
 from . import _registry_load  # noqa: F401  (side-effect: registers all queries)
 from .api import Engine
-from .plans import DRIVER_PRIORITY, ORACLE_SQL, QUERIES, ordered_queries
+from .plans import ORACLE_SQL, QUERIES, ordered_queries
 from .session import ensure_configs, get_spark, load_table, load_tables
 
 __all__ = [
-    "DRIVER_PRIORITY",
     "Engine",
     "ORACLE_SQL",
     "QUERIES",

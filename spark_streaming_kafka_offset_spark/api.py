@@ -62,7 +62,7 @@ class Engine:
         return QUERIES[key](self.spark, self.sf_dir)
 
     def keys(self) -> list[str]:
-        """Registered query keys, driver-priority order."""
+        """Registered query keys, driver-window order (``ordered_queries``)."""
         return list(ordered_queries())
 
     def oracle(self, key: str) -> str | None:

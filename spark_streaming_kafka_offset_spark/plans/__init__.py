@@ -1,5 +1,5 @@
 """Plan layer: query registry + oracle SQL + plan-inspection helpers."""
 
-from .registry import DRIVER_PRIORITY, ORACLE_SQL, QUERIES, ordered_queries, register
+from .registry import ORACLE_SQL, QUERIES, ordered_queries, register
 
-__all__ = ["DRIVER_PRIORITY", "ORACLE_SQL", "QUERIES", "ordered_queries", "register"]
+__all__ = ["ORACLE_SQL", "QUERIES", "ordered_queries", "register"]

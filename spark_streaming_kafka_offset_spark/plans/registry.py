@@ -7,7 +7,10 @@ Every operator from SURVEY.md §2 registers itself here with its key and
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,597 +39,47 @@ def register(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn
     return deco
 
 
-#: Driver-window priority.  The driver's correctness harness evaluates only
-#: the FIRST 50 registered queries (observed in rounds 1-2: CORRECTNESS_rNN
-#: keys are exactly the first 50 registration-order keys), so ordering IS
-#: evidence policy — it gets ROTATED each round so that, across rounds,
-#: every oracle-backed key accumulates at least one hard driver-green row.
-#: Freshness rule (VERDICT r4 #2 / r5 #8, codified in
-#: tests/test_registry.py): the window must always hold the oracle keys
-#: with the OLDEST newest-hard-row (never-proven keys first, re-proof
-#: keys from REPROOF_VOID counting as never-proven), with any
-#: arithmetic overflow named explicitly in DEFERRED_R17 so the next
-#: round's queue is derivable from the CORRECTNESS ledgers alone.
-#: At the r16 rotation (CORRECTNESS_r15 hard-proved the whole r15
-#: window): no oracle key is never-proven, so the full 46-key
-#: DEFERRED_R16 queue (the r8-tier spillover) fills 46 slots; the
-#: 50-key r9 tier overflows the remaining 4, so the 46 r9 keys that did
-#: not fit are named in DEFERRED_R17 — they head the r17 window.
+#: Directory holding the driver's ``CORRECTNESS_rNN.json`` ledgers (the
+#: repo root).  One ledger per round: a row per checked key, and a row
+#: with ``hash_match`` true is that round's proof of the key.
+LEDGER_DIR = Path(__file__).resolve().parents[2]
 
 #: Re-proof register: keys whose semantics changed AFTER their newest
 #: hard CORRECTNESS row, so ledger rows up to and including the named
-#: round prove SUPERSEDED semantics and the freshness test treats the
-#: key as never-proven until a newer row lands.  Entries become inert
-#: once a row newer than the named round lands and are pruned at the
-#: following rotation (dedup_semantic's r13 entry, pruned at the r15
-#: rotation once CORRECTNESS_r14 hard-proved the exact-collapse
-#: semantics, is the precedent).  Empty at the r16 rotation: the r16
-#: rotation reorders keys only, and no change since CORRECTNESS_r15
-#: supersedes a proven key's semantics, so every ledger row still
-#: proves current semantics.
+#: round prove SUPERSEDED semantics and the key counts as never-proven
+#: until a newer row lands.  Entries become inert once a row newer than
+#: the named round lands, and are then pruned (dedup_semantic's r13
+#: entry, pruned once CORRECTNESS_r14 hard-proved the exact-collapse
+#: semantics, is the precedent).  Empty: no change since
+#: CORRECTNESS_r15 supersedes a proven key's semantics, so every ledger
+#: row still proves current semantics.
 REPROOF_VOID: dict[str, int] = {}
-
-DEFERRED_R17: tuple[str, ...] = (
-    # r9-tier spillover (newest hard row r9; stalest-outside-window at
-    # the r16 rotation) — the r17 window head, in r9-tier listed order.
-    # The first 4 r9-tier keys (agg_bootstrap_ci, agg_collect,
-    # agg_countmin_heavyhitters, agg_cramer_von_mises) took the window
-    # slots left after the 46-key DEFERRED_R16 queue.
-    "agg_grouped_ols",
-    "agg_hdr_histogram",
-    "agg_hurst_exponent",
-    "agg_incremental_state_merge",
-    "agg_jackknife_ratio",
-    "agg_kendall_tau",
-    "agg_power_analysis",
-    "agg_spearman_corr",
-    "agg_ttest_paired",
-    "agg_welch_ttest",
-    "corpus_dsir_weights",
-    "corpus_eval_allocation",
-    "corpus_temperature_mixture",
-    "docs_ccnet_perplexity_buckets",
-    "docs_nb_quality_classifier",
-    "docs_preference_pairs",
-    "eval_isotonic_calibration",
-    "events_ab_cuped",
-    "events_burstiness_index",
-    "events_cross_correlation",
-    "events_cusum_drift",
-    "events_entropy_rate",
-    "events_forecast_backtest",
-    "events_kaplan_meier",
-    "events_markov_stationary",
-    "events_shapley_attribution",
-    "fn_ip_cidr",
-    "graph_adamic_adar",
-    "lineitem_price_index",
-    "orders_abc_xyz",
-    "orders_chain_ladder",
-    "orders_weibull_fit",
-    "scan_selectivity_estimates",
-    "snapshot_diff",
-    "text_bigram_pmi",
-    "text_fingerprint",
-    "text_langid",
-    "text_quality",
-    "text_rake_keywords",
-    "text_repetition",
-    "text_textrank_keywords",
-    "text_zipf_fit",
-    "unpivot_long",
-    "vocab_topk",
-    "win_median_sliding",
-    "win_moving_avg",
-)
-
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # ---- Window policy (r16): the driver checks the FIRST 50 keys only.
-    # r2-r15 each hash-proved a 50-key window (all green; fifteen
-    # ledgers, zero hash mismatches ever); their union hard-covers all
-    # 395 registered oracle pairs, so no key is never-proven.  This
-    # window holds the full 46-key DEFERRED_R16 queue from the r15
-    # seal (the r8-tier spillover, in its listed order), plus the
-    # first 4 of the 50-key r9 tier.  Green rows here mean every
-    # oracle pair has a hard CORRECTNESS row no older than r9.
-    # tests/test_registry.py::test_window_targets_stalest_oracle_keys
-    # derives this policy from the CORRECTNESS ledgers and fails if the
-    # window ever omits a stalest-tier key not named in DEFERRED_R17.
-    # -- stalest hard-proven tier: the 46-key r8 spillover named in
-    #    DEFERRED_R16 at the r15 seal (its listed order) --
-    "agg_mannwhitney_u",
-    "cdc_net_changes",
-    "corpus_dedup_survivorship",
-    "customer_interpurchase_mix",
-    "docs_winnowing_fingerprint",
-    "embed_knn_graph",
-    "eval_confusion_thresholds",
-    "eval_score_reliability",
-    "events_benford_deviation",
-    "events_burst_hysteresis",
-    "events_drift_jsd",
-    "events_peak_concurrency",
-    "events_user_day_entropy",
-    "feat_minmax_zscore",
-    "feat_onehot_topk",
-    "feat_quantile_bins",
-    "feat_target_encode",
-    "feat_woe_iv",
-    "fn_geo_haversine",
-    "fn_interval_arith",
-    "fn_uri_parse",
-    "join_skew_salted",
-    "lineitem_discount_lift",
-    "multimodal_meta",
-    "orders_skyline_2d",
-    "pack_sequences",
-    "pipeline_corpus_shards",
-    "pivot_wide",
-    "privacy_k_anonymity",
-    "q10_returned_items",
-    "q5_local_supplier",
-    "resample_locf",
-    "rollup_time",
-    "sample_weighted",
-    "scan_corrupt_tolerant",
-    "scan_dynamic_pruning",
-    "scan_partition_pruned",
-    "scan_schema_evolution",
-    "set_union_all",
-    "split_kfold_balance",
-    "stream_offset_commit_lag",
-    "stream_rebalance_plan",
-    "table_compaction_plan",
-    "text_readability",
-    "win_percent_change",
-    "win_running_distinct",
-    # -- next-stalest: the first 4 of the 50-key r9 tier (alphabetical;
-    #    the remaining 46 are named in DEFERRED_R17) --
-    "agg_bootstrap_ci",
-    "agg_collect",
-    "agg_countmin_heavyhitters",
-    "agg_cramer_von_mises",
-    # --- window boundary (50) ---
-    # Oracle keys registered during r16, after this window seal, are
-    # appended HERE (and to DEFERRED_R17) — the r17 queue head.
-    # Hard-proven oracle keys below, stalest evidence first — ascending
-    # newest hard row, alphabetical within a tier — so the r17+
-    # rotation queue reads straight down this list after any deferrals.
-    # -- newest hard row: r9 (the 46-key DEFERRED_R17 spillover) --
-    "agg_grouped_ols",
-    "agg_hdr_histogram",
-    "agg_hurst_exponent",
-    "agg_incremental_state_merge",
-    "agg_jackknife_ratio",
-    "agg_kendall_tau",
-    "agg_power_analysis",
-    "agg_spearman_corr",
-    "agg_ttest_paired",
-    "agg_welch_ttest",
-    "corpus_dsir_weights",
-    "corpus_eval_allocation",
-    "corpus_temperature_mixture",
-    "docs_ccnet_perplexity_buckets",
-    "docs_nb_quality_classifier",
-    "docs_preference_pairs",
-    "eval_isotonic_calibration",
-    "events_ab_cuped",
-    "events_burstiness_index",
-    "events_cross_correlation",
-    "events_cusum_drift",
-    "events_entropy_rate",
-    "events_forecast_backtest",
-    "events_kaplan_meier",
-    "events_markov_stationary",
-    "events_shapley_attribution",
-    "fn_ip_cidr",
-    "graph_adamic_adar",
-    "lineitem_price_index",
-    "orders_abc_xyz",
-    "orders_chain_ladder",
-    "orders_weibull_fit",
-    "scan_selectivity_estimates",
-    "snapshot_diff",
-    "text_bigram_pmi",
-    "text_fingerprint",
-    "text_langid",
-    "text_quality",
-    "text_rake_keywords",
-    "text_repetition",
-    "text_textrank_keywords",
-    "text_zipf_fit",
-    "unpivot_long",
-    "vocab_topk",
-    "win_median_sliding",
-    "win_moving_avg",
-    # -- newest hard row: r10 --
-    "agg_distinct",
-    "agg_fdr_bh",
-    "agg_grouping_sets",
-    "agg_hash",
-    "agg_mode",
-    "agg_percentile",
-    "agg_pinball_loss",
-    "agg_theil_inequality",
-    "analyze_table_stats",
-    "bpe_merge_candidates",
-    "corpus_dedup_rate_curve",
-    "dedup_exact",
-    "dedup_minhash_md5",
-    "distinct_rows",
-    "docs_bradley_terry",
-    "embed_bucket_stats",
-    "embed_centroids",
-    "embed_hubness",
-    "eval_auc_roc",
-    "eval_brier_decomposition",
-    "eval_cohens_kappa",
-    "eval_lift_gains",
-    "eval_pr_auc",
-    "filter_null",
-    "filter_pred",
-    "fn_json",
-    "fn_map",
-    "interarrival_stats",
-    "join_anti",
-    "join_asof",
-    "join_broadcast",
-    "join_inner_hash",
-    "join_interval_bucketed",
-    "join_left",
-    "join_semi",
-    "lang_balanced_sample",
-    "orders_diff_in_diff",
-    "orders_logrank_delay",
-    "orders_safety_stock",
-    "project_expr",
-    "q11_top_nations",
-    "q12_priority_split",
-    "q15_top_supplier",
-    "q16_supplier_variety",
-    "q17_small_quantity",
-    "q19_disjunctive_pred",
-    "q20_volume_suppliers",
-    "q21_waiting_suppliers",
-    "q22_idle_customers",
-    "text_gopher_rules",
-    # -- newest hard row: r11 --
-    "agg_cube",
-    "agg_gumbel_peak_fit",
-    "agg_mutual_information",
-    "agg_negbin_overdispersion",
-    "agg_raking_ipf",
-    "agg_stats",
-    "agg_trend_cochran_armitage",
-    "char_ngram_profile",
-    "corpus_tokenizer_oov_rate",
-    "data_quality_rules",
-    "dedup_embed_cosine",
-    "dedup_incremental_merge",
-    "dedup_shingle",
-    "docs_instruction_format_check",
-    "docs_rouge_n",
-    "events_ab_srm",
-    "events_bounce_rate",
-    "events_conversion_lag",
-    "events_funnel",
-    "events_funnel_windowed",
-    "events_hodges_lehmann_daily",
-    "events_holt_winters_forecast",
-    "events_periodogram",
-    "events_runs_test",
-    "events_sprt_purchase_rate",
-    "feat_hashing_collisions",
-    "fn_luhn_checksum",
-    "graph_label_propagation",
-    "orders_price_elasticity",
-    "orders_repeat_purchase_curve",
-    "privacy_forget_user_purge",
-    "privacy_l_diversity",
-    "privacy_t_closeness",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q8_market_share",
-    "q9_product_profit",
-    "scan_parquet",
-    "scan_pruned",
-    "sim_hard_negatives",
-    "sim_topk_exact",
-    "sort_multi",
-    "source_p75_gate",
-    "text_bm25_topk",
-    "text_tfidf",
-    "topk_per_group",
-    "ts_similarity_topk",
-    "win_range_frame",
-    "win_rank",
-    # -- newest hard row: r12 --
-    "agg_brown_forsythe",
-    "agg_cochran_q",
-    "agg_friedman_test",
-    "agg_gamma_gk",
-    "agg_grubbs_test",
-    "agg_jonckheere_terpstra",
-    "agg_kruskal_wallis",
-    "agg_ljung_box",
-    "agg_mann_kendall",
-    "agg_mcnemar",
-    "agg_odds_ratio_mh",
-    "agg_partial_corr",
-    "embed_silhouette",
-    "eval_map",
-    "eval_mrr",
-    "eval_ndcg",
-    "eval_rbo",
-    "events_lead_lag_cmh",
-    "events_markov_transitions",
-    "events_nelson_aalen",
-    "events_rayleigh_hour",
-    "feat_split_gain",
-    "fn_array",
-    "fn_bitwise",
-    "fn_case",
-    "fn_cast",
-    "fn_date",
-    "fn_fuzzy",
-    "fn_math",
-    "fn_null",
-    "fn_string",
-    "graph_assortativity",
-    "graph_clustering_coefficient",
-    "graph_modularity",
-    "graph_rich_club",
-    "join_asof_tolerance",
-    "join_cross",
-    "join_full",
-    "join_interval",
-    "join_right",
-    "join_theta_range",
-    "latest_by_key",
-    "limit_topk",
-    "merge_upsert",
-    "multimodal_dedup_phash",
-    "orders_croston_demand",
-    "orders_eoq",
-    "orders_newsvendor",
-    "orders_rfm_segments",
-    "q13_order_distribution",
-    # -- newest hard row: r13 (the r13 window: 13 r12-registered pairs +
-    #    20 r5-tier + 17 r6-tier keys, all proven in CORRECTNESS_r13;
-    #    alphabetical) --
-    "agg_ansari_bradley",
-    "agg_cliffs_delta",
-    "agg_cohens_d",
-    "agg_corr_exact",
-    "agg_durbin_watson",
-    "agg_histogram",
-    "agg_kmv_bottomk",
-    "agg_moments_exact",
-    "agg_mood_median",
-    "agg_page_trend",
-    "agg_quade_test",
-    "analyze_sampled_stats",
-    "audience_overlap_exact",
-    "cohort_ltv",
-    "corpus_admission_pipeline",
-    "corpus_psi_drift",
-    "dedup_containment",
-    "dedup_lsh_recall",
-    "embed_dim_variance",
-    "embed_quantize_int8",
-    "eval_ece",
-    "events_ab_lift",
-    "events_activity_streaks",
-    "events_anomaly_mad",
-    "events_attribution",
-    "events_changepoint",
-    "events_dau_mau_stickiness",
-    "events_turning_points",
-    "orders_bullwhip_ratio",
-    "q14_promo_share",
-    "q18_big_orders",
-    "q4_priority_exists",
-    "q6_forecast_revenue",
-    "q7_volume_flows",
-    "rollup_stats",
-    "sample_stratified",
-    "scan_manifest_pruned",
-    "scan_zorder_pruned",
-    "sessionize_batch",
-    "set_except",
-    "set_intersect",
-    "set_union",
-    "split_hash",
-    "sub_correlated",
-    "text_stats",
-    "text_template_prefixes",
-    "text_tokens",
-    "win_distribution",
-    "win_frame_running",
-    "win_lag_lead",
-    # -- newest hard row: r14 (the r14 window: the dedup_semantic
-    #    re-proof + 7 r13-registered pairs + the 32-key r6 tier + the
-    #    first 10 of the r7 tier, all proven in CORRECTNESS_r14;
-    #    alphabetical) --
-    "agg_chisq_independence",
-    "agg_entropy_categorical",
-    "agg_histogram_2d",
-    "agg_share_of_total_nested",
-    "agg_theilsen_trend",
-    "agg_trimmed_winsorized",
-    "agg_weighted_median",
-    "chunk_documents",
-    "cohort_retention",
-    "contamination_check",
-    "dedup_semantic",
-    "docs_bleu",
-    "eval_krippendorff_alpha",
-    "events_ewma",
-    "events_pattern_match",
-    "events_rolling_active",
-    "events_top_paths",
-    "fn_hof",
-    "fn_variant",
-    "graph_degree_stats",
-    "graph_kcore",
-    "graph_pagerank",
-    "graph_shortest_paths",
-    "graph_triangle_count",
-    "join_asof_nearest",
-    "join_temporal_dim",
-    "kmeans_lloyd_exact",
-    "lineitem_vwap_monthly",
-    "merge_scd2",
-    "orders_abc_pareto",
-    "orders_adi_cv2",
-    "orders_backlog_sweep",
-    "orders_basket_affinity",
-    "orders_duplicate_payments",
-    "orders_seasonality",
-    "resample_interp",
-    "rollup_bitmap_distinct",
-    "scan_agg_pushdown",
-    "scan_bloom_prepass",
-    "scan_csv_json",
-    "sql_recursive_cte",
-    "table_skew_stats",
-    "text_code_detect",
-    "text_dedup_paragraph",
-    "text_entropy",
-    "text_langid_confusion",
-    "text_lm_perplexity",
-    "text_ocr_artifacts",
-    "text_pii_redact",
-    "text_script_profile",
-    # -- newest hard row: r15 (the r15 window: the 6 r14-registered
-    #    pairs + the 40-key r7-tier spillover + the first 4 r8-tier
-    #    keys, all proven in CORRECTNESS_r15; alphabetical) --
-    "agg_covariance_matrix",
-    "agg_gini_lorenz",
-    "agg_kmv_jaccard",
-    "agg_ks_test",
-    "corpus_heaps_curve",
-    "corpus_mixture_plan",
-    "corpus_source_similarity",
-    "corpus_token_budget",
-    "dedup_clusters",
-    "dedup_ngram_jaccard",
-    "docs_chrf",
-    "docs_curriculum_order",
-    "docs_edit_distance",
-    "embed_matryoshka_eval",
-    "embed_norm_stats",
-    "entity_resolution_blocked",
-    "eval_concordance_ccc",
-    "eval_fleiss_kappa",
-    "eval_mcc",
-    "events_acf",
-    "events_bot_score",
-    "events_holt_forecast",
-    "events_new_users_daily",
-    "events_outliers",
-    "events_stl_decompose",
-    "events_user_lifecycle",
-    "fn_array_ops",
-    "fn_binary_codec",
-    "fn_date_trunc_iso",
-    "fn_hash_digests",
-    "fn_regexp",
-    "graph_common_neighbors",
-    "join_asof_fwd",
-    "join_bucketed",
-    "join_geo_grid",
-    "join_lateral_topk",
-    "lineitem_gmv_waterfall",
-    "orders_hazard_table",
-    "orders_ontime_ship_rate",
-    "orders_rfm_migration",
-    "orders_ship_delay_histogram",
-    "revenue_bridge_yoy",
-    "set_except_all",
-    "set_intersect_all",
-    "supplier_hhi_concentration",
-    "table_partition_advisor",
-    "text_hapax_ratio",
-    "text_ngram_novelty",
-    "text_normalize",
-    "text_url_canonicalize",
-    # Rows-only SURVEY rows (no DuckDB-expressible oracle), streaming
-    # first — never occupy window slots (locked by test_registry.py).
-    "sim_topk_pq",
-    "bpe_train_iterative",
-    "rollup_hll_intersect",
-    "stream_autoscale_signal",
-    "bpe_encode_corpus",
-    "embed_pca_project",
-    "stream_dlq_split",
-    "stream_offset_gap_audit",
-    "stream_backfill_stitch",
-    "embed_outliers_mahalanobis",
-    "source_python_datasource",
-    "udf_arrow_native",
-    "scan_observed_metrics",
-    "scan_cached_reuse",
-    "stream_tumbling",
-    "stream_sliding",
-    "stream_session",
-    "stream_watermark",
-    "stream_dedup",
-    "stream_stateful",
-    "stream_static_join",
-    "stream_stream_join",
-    "stream_left_outer_join",
-    "stream_full_outer_join",
-    "stream_scd2_apply",
-    "stream_multi_topic_union",
-    "stream_offset_ledger",
-    "stream_offset_lag_monitor",
-    "stream_offset_rewind",
-    "stream_rate_limit",
-    "stream_rollup_upsert",
-    "stream_dedup_corpus",
-    "stream_pack_shards",
-    "stream_topk_windowed",
-    "stream_cdc_apply",
-    "stream_cusum_alarm",
-    "stream_watermark_metrics",
-    "sink_txn_log",
-    "scan_txn_maintenance",
-    "rollup_tdigest",
-    "source_kafka",
-    "source_file_stream",
-    "sink_parquet",
-    "sink_foreachbatch",
-    "sink_memory",
-    "sink_compacted",
-    "sink_jsonl_shards",
-    "agg_approx_distinct",
-    "rollup_hll",
-    "dedup_minhash",
-    "dedup_simhash",
-    "detect_hot_keys",
-    "sim_topk_ann",
-    "sim_topk_ivf",
-    "udf_python",
-    "udf_pandas",
-    "udaf_applyinpandas",
-    "udtf_python",
-    "multimodal_cols",
-    "multimodal_transform",
-    "stream_cms_merge",
-    "stream_txn_exactly_once",
-    "table_vacuum_plan",
-    "scan_rowgroup_zonemap",
-    "scan_orc",
-    "stream_temporal_dim_join",
-    # r14: streaming semantic admission (embedding twin of
-    # stream_dedup_corpus — §2.9; rows-only: streaming).
-    "stream_dedup_embed",
-)
 
 
 def ordered_queries() -> dict[str, QueryFn]:
-    """Registry in driver-priority order (unlisted keys appended last)."""
-    out = {k: QUERIES[k] for k in DRIVER_PRIORITY if k in QUERIES}
-    out.update({k: v for k, v in QUERIES.items() if k not in out})
-    return out
+    """Registry in driver-window order, derived from the ledgers.
+
+    The driver checks only the first 50 keys (SURVEY.md §5.1), so the
+    order is the evidence policy: oracle keys first, stalest evidence
+    first.  A key's effective round is the newest round whose ledger row
+    has ``hash_match`` true (0 if none, or while that round is at or
+    below the key's ``REPROOF_VOID`` round); ties go by key.  Rows-only
+    keys follow every oracle key.  A landed ledger moves the window by
+    itself: no key is ever hand-ordered.
+    """
+    newest: dict[str, int] = {}
+    for path in LEDGER_DIR.glob("CORRECTNESS_r*.json"):
+        name = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if name is None:
+            continue
+        rnd = int(name.group(1))
+        for key, row in json.loads(path.read_text()).items():
+            if isinstance(row, dict) and row.get("hash_match"):
+                newest[key] = max(newest.get(key, 0), rnd)
+
+    def effective_round(k: str) -> int:
+        n = newest.get(k, 0)
+        return 0 if n <= REPROOF_VOID.get(k, -1) else n
+
+    order = sorted(QUERIES, key=lambda k: (k not in ORACLE_SQL, effective_round(k), k))
+    return {k: QUERIES[k] for k in order}

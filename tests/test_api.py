@@ -26,9 +26,9 @@ def test_run_registered_query(eng):
 
 def test_keys_ordered_and_oracle_lookup(eng):
     ks = eng.keys()
-    from spark_streaming_kafka_offset_spark.plans.registry import DRIVER_PRIORITY
+    from spark_streaming_kafka_offset_spark.plans.registry import ordered_queries
 
-    assert tuple(ks) == DRIVER_PRIORITY  # driver-priority order
+    assert ks == list(ordered_queries())  # driver-window order
     assert eng.oracle("agg_hash") is not None
     assert eng.oracle("stream_tumbling") is None
 
